@@ -131,27 +131,11 @@ def _fetch_stored(spark, segs_by_id, wanted, fl):
 def _search(args) -> int:
     from .operators.search import MultiSearcher, Searcher
     from .session import get_spark
-    from .sources.catalog import Catalog
 
+    cat = _require_index(args.index)
+    if isinstance(cat, int):
+        return cat
     spark = get_spark(app_name="fulltext-search")
-    # an absent or empty index path is a user error, not an internal
-    # state (Lucene's IndexNotFoundException; its read path never creates
-    # the directory) — check BEFORE Catalog(), whose constructor mkdirs
-    if not os.path.isdir(args.index):
-        print(
-            json.dumps({"error": f"no index found at '{args.index}' "
-                        "(directory does not exist)"}),
-            file=sys.stderr,
-        )
-        return 2
-    cat = Catalog(args.index)
-    if not cat.segments():
-        print(
-            json.dumps({"error": f"no index found at '{args.index}' "
-                        "(no committed segments)"}),
-            file=sys.stderr,
-        )
-        return 2
     printed = "doc_id"  # branches serving gdoc-space results override
     if getattr(args, "deftype", "lucene") == "edismax":
         # eDisMax request (ExtendedDismaxQParser analog): the catalog's
@@ -440,37 +424,36 @@ def _search(args) -> int:
     return 0
 
 
-def _require_index(path: str) -> int | None:
+def _require_index(path: str):
     """Shared IndexNotFoundException-analog guard for read-only
-    subcommands: refuse a missing or segment-less index path with the
-    CLI's JSON error contract, WITHOUT creating the directory."""
+    subcommands: the index's Catalog, or exit code 2 after refusing a
+    missing or segment-less index path with the CLI's JSON error
+    contract. Runs before any Spark session starts, and never creates the
+    directory (checked BEFORE Catalog(), whose constructor mkdirs)."""
+    from .sources.catalog import Catalog
+
     if not os.path.isdir(path):
-        print(
-            json.dumps({"error": f"no index found at '{path}' "
-                        "(directory does not exist)"}),
-            file=sys.stderr,
-        )
-        return 2
-    return None
+        reason = "directory does not exist"
+    else:
+        cat = Catalog(path)
+        if cat.segments():
+            return cat
+        reason = "no committed segments"
+    print(
+        json.dumps({"error": f"no index found at '{path}' ({reason})"}),
+        file=sys.stderr,
+    )
+    return 2
 
 
 def _check(args) -> int:
     from .operators.checker import check_segment
     from .session import get_spark
-    from .sources.catalog import Catalog
 
-    rc = _require_index(args.index)
-    if rc is not None:
-        return rc
+    cat = _require_index(args.index)
+    if isinstance(cat, int):
+        return cat
     spark = get_spark(app_name="fulltext-check")
-    cat = Catalog(args.index)
-    if not cat.segments():
-        print(
-            json.dumps({"error": f"no index found at '{args.index}' "
-                        "(no committed segments)"}),
-            file=sys.stderr,
-        )
-        return 2
     for seg in cat.segments():
         summary = check_segment(spark, seg)
         print(json.dumps({"segment_id": seg.segment_id, **summary}))
@@ -480,20 +463,11 @@ def _check(args) -> int:
 def _merge(args) -> int:
     from .operators.merge import merge_segments
     from .session import get_spark
-    from .sources.catalog import Catalog
 
-    rc = _require_index(args.index)
-    if rc is not None:
-        return rc
+    cat = _require_index(args.index)
+    if isinstance(cat, int):
+        return cat
     spark = get_spark(app_name="fulltext-merge")
-    cat = Catalog(args.index)
-    if not cat.segments():
-        print(
-            json.dumps({"error": f"no index found at '{args.index}' "
-                        "(no committed segments)"}),
-            file=sys.stderr,
-        )
-        return 2
     merged = merge_segments(spark, cat.segments(), catalog=cat)
     print(
         json.dumps(

@@ -196,15 +196,17 @@ def merge_segments(
     import os
 
     root = out_dir or (catalog.root if catalog else None)
-    if catalog is not None and root != catalog.root:
-        # a merged segment written OUTSIDE the catalog cannot be committed
-        # by the swap below, yet drop_sources would still delete the
-        # sources — refuse the combination instead of losing the docs
-        raise ValueError(
-            "catalog merges must write into catalog.root "
-            f"({catalog.root!r}); got out_dir={out_dir!r} — "
-            "pass catalog=None for a detached merge"
-        )
+    if catalog is not None:
+        if os.path.realpath(root) != os.path.realpath(catalog.root):
+            # a merged segment written OUTSIDE the catalog cannot be
+            # committed by the swap below, yet drop_sources would still
+            # delete the sources — refuse instead of losing the docs
+            raise ValueError(
+                "catalog merges must write into catalog.root "
+                f"({catalog.root!r}); got out_dir={out_dir!r} — "
+                "pass catalog=None for a detached merge"
+            )
+        root = catalog.root  # one spelling for every path derived below
     # merge commit protocol (SegmentInfos analog): build the merged segment
     # under an underscore-prefixed STAGING dir (never listed by the catalog),
     # rename it to its final name, then publish merged-in/sources-out with
@@ -212,7 +214,7 @@ def merge_segments(
     # segment set or the new one, never merged docs twice. Physical source
     # cleanup + tombstone purge happen after the commit (a crash in between
     # leaves only unlisted orphan dirs / stale tombstones of dead ids).
-    staged = catalog is not None and root == catalog.root
+    staged = catalog is not None
     seg_path = (
         os.path.join(root, f"_stage-{seg_id}" if staged else seg_id)
         if root

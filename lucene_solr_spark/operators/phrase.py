@@ -64,7 +64,7 @@ def phrase_topk(
     ``slop=0``: exact adjacency; ``slop>0``: SloppyPhraseMatcher semantics
     (incl. repeat groups) with fractional sloppy freq. ``deleted``:
     optional sorted int64 array of tombstoned doc_ids, excluded before the
-    local top-k (liveDocs analog — same contract as score_postings)."""
+    local top-k (liveDocs analog)."""
     assert segment.has_table("positions"), (
         "segment was built without positions (build_index(with_positions=True))"
     )

@@ -44,6 +44,20 @@ from ..sources.catalog import Segment
 from . import bm25
 
 _TOPK_SCHEMA = "doc_id long, score float"
+_MULTI_SCHEMA = "segment_id string, doc_id long, gdoc_id long, score float"
+
+# side-channel row tags (see _bucket_plan)
+_POS, _FQ, _DEL = 0, 1, 2
+_NO_SIDE = pd.DataFrame(
+    {"doc_id": np.array([], dtype=np.int64), "tag": np.array([], dtype=np.int32)}
+)
+
+
+def _empty_topk() -> pd.DataFrame:
+    return pd.DataFrame(
+        {"doc_id": np.array([], dtype=np.int64),
+         "score": np.array([], dtype=np.float32)}
+    )
 
 
 @dataclass
@@ -356,14 +370,7 @@ class Searcher:
         return self._topk_query_run(q, k, fq)
 
     def _topk_query_run(self, q, k: int, fq: str | None) -> DataFrame:
-        from .query import (
-            collect_fields,
-            collect_phrases,
-            collect_synonyms,
-            collect_term_leaves,
-            collect_terms,
-            rewrite,
-        )
+        from .query import collect_fields, collect_phrases, collect_terms, rewrite
 
         q = rewrite(q)
         if collect_fields(q) - {None}:
@@ -375,31 +382,13 @@ class Searcher:
         stats = self.term_stats(sorted(collect_terms(q)))
         if not stats:
             return self.spark.createDataFrame([], _TOPK_SCHEMA)
-        leaf_terms = collect_term_leaves(q)
-        idfs = {
-            t: np.float32(stats[t].idf) for t in sorted(stats) if t in leaf_terms
-        }
-        # Synonym leaves: blended idf from max member df (SynonymQuery.java);
-        # leaves with no present member are omitted -> match nothing.
-        syn_idfs: dict = {}
-        for sq in set(collect_synonyms(q)):
-            dfs = [stats[t].df for t in set(sq.terms) if t in stats]
-            if dfs:
-                syn_idfs[sq] = np.float32(bm25.idf(self.stats.n_docs, max(dfs)))
+        idfs, syn_idfs, phrase_idfs = _tree_idfs(q, stats, self.stats.n_docs)
         positions = None
-        phrase_idfs: dict = {}
         if phrases:
             assert self.segment.has_table("positions"), (
                 "phrase clauses need a positional index "
                 "(build_index(with_positions=True))"
             )
-            for p in set(phrases):
-                if all(t in stats for t in p.terms):
-                    # idf summed over ALL phrase positions, duplicates counted
-                    # (BM25Similarity#idfExplain over the terms array)
-                    phrase_idfs[p] = np.float32(
-                        sum(stats[t].idf for t in p.terms)
-                    )
             positions = self.segment.table(self.spark, "positions")
         per_bucket = score_query_postings(
             self.postings, q, idfs, self._cache, k,
@@ -802,6 +791,119 @@ def build_fq_docs(spark: SparkSession, segment: Segment, fq: str) -> DataFrame:
     )
 
 
+def _tree_idfs(q, stats: dict[str, TermStats], n_docs: int):
+    """float32 idfs of a rewritten query tree's leaves from its term stats
+    (``n_docs`` = the N those stats were taken over): Term leaf -> idf;
+    Synonym -> idf of its max member df (SynonymQuery.java); Phrase -> idf
+    summed over ALL its positions, duplicates counted
+    (BM25Similarity#idfExplain over the terms array). A Synonym with no
+    present member, or a Phrase with any absent term, is omitted and
+    matches nothing."""
+    from .query import collect_phrases, collect_synonyms, collect_term_leaves
+
+    leaf_terms = collect_term_leaves(q)
+    idfs = {t: np.float32(stats[t].idf) for t in sorted(stats) if t in leaf_terms}
+    syn_idfs: dict = {}
+    for sq in set(collect_synonyms(q)):
+        dfs = [stats[t].df for t in set(sq.terms) if t in stats]
+        if dfs:
+            syn_idfs[sq] = np.float32(bm25.idf(n_docs, max(dfs)))
+    phrase_idfs = {
+        p: np.float32(sum(stats[t].idf for t in p.terms))
+        for p in set(collect_phrases(q))
+        if all(t in stats for t in p.terms)
+    }
+    return idfs, syn_idfs, phrase_idfs
+
+
+def _bucket_plan(
+    rows: DataFrame,
+    leaf,
+    filter_docs: DataFrame | None,
+    deleted_docs: DataFrame | None,
+    positions: DataFrame | None = None,
+) -> DataFrame:
+    """The one per-bucket plan under both scoring entry points.
+    ``leaf(left, right)`` scores one doc-space bucket: ``left`` holds its
+    postings rows, ``right`` its side-channel rows, each tagged in one
+    ``tag`` column as a position row (_POS), a doc passing the fq (_FQ)
+    or a tombstone (_DEL). With no side channel the plan is a plain
+    groupBy and the leaf gets an empty ``right``; otherwise it is ONE
+    cogroup on ``bucket`` — both sides share the build-time bucketing, so
+    no shuffle join appears and neither the fq set nor the delete backlog
+    ever reaches the driver."""
+    side = []
+    if positions is not None:
+        side.append(positions.withColumn("tag", F.lit(_POS)))
+    for docs, tag in ((filter_docs, _FQ), (deleted_docs, _DEL)):
+        if docs is not None:
+            side.append(docs.select("bucket", "doc_id", F.lit(tag).alias("tag")))
+    if not side:
+        return rows.groupBy("bucket").applyInPandas(
+            lambda pdf: leaf(pdf, _NO_SIDE), _TOPK_SCHEMA
+        )
+    right = side[0]
+    for s in side[1:]:
+        # fq / tombstone rows carry null position columns
+        right = right.unionByName(s, allowMissingColumns=True)
+    return (
+        rows.groupBy("bucket")
+        .cogroup(right.groupBy("bucket"))
+        .applyInPandas(leaf, _TOPK_SCHEMA)
+    )
+
+
+def _split_side(right: pd.DataFrame, has_filter: bool):
+    """One bucket's side channel -> (position rows, doc ids passing the
+    fq or None when no fq is set, tombstoned doc ids)."""
+    tag = right["tag"].to_numpy()
+    ids = right["doc_id"].to_numpy(dtype=np.int64)
+    allowed = ids[tag == _FQ] if has_filter else None
+    return right[tag == _POS], allowed, ids[tag == _DEL]
+
+
+def _excluded(
+    base: int,
+    span: int,
+    deleted: np.ndarray | None,
+    allowed: np.ndarray | None = None,
+) -> np.ndarray:
+    """bool[span] over the bucket docs [base, base + span): True where the
+    liveDocs/fq mask removes the doc — tombstoned, or (when ``allowed`` is
+    given) outside the fq set. Excluded docs never match and never hold a
+    pruning-threshold slot; corpus stats are untouched (Lucene liveDocs,
+    Solr fq)."""
+    out = np.full(span, allowed is not None)
+    for ids, value in ((allowed, False), (deleted, True)):
+        if ids is not None:
+            rel = ids - base
+            out[rel[(rel >= 0) & (rel < span)]] = value
+    return out
+
+
+def _local_topk(
+    mask: np.ndarray,
+    score: np.ndarray,
+    base: int,
+    k: int,
+    after: tuple[float, int] | None = None,
+) -> pd.DataFrame:
+    """A bucket's local top-k by (score desc, doc_id asc) among ``mask``.
+    ``after``: searchAfter cursor — keep only hits strictly after
+    (score, doc_id) in that order, BEFORE the top-k cap."""
+    nz = np.nonzero(mask)[0]
+    scores = score[nz]
+    if after is not None:
+        a_s, a_d = np.float32(after[0]), int(after[1])
+        keep = (scores < a_s) | ((scores == a_s) & (nz + base > a_d))
+        nz, scores = nz[keep], scores[keep]
+    # lexsort on (doc_id asc) then stable by -score
+    order = np.lexsort((nz, -scores))[:k]
+    return pd.DataFrame(
+        {"doc_id": (nz[order] + base).astype(np.int64), "score": scores[order]}
+    )
+
+
 def score_postings(
     postings: DataFrame,
     idfs: dict[str, np.float32],
@@ -811,7 +913,6 @@ def score_postings(
     n_query_terms: int,
     avgdl: float,
     use_wand: bool,
-    deleted: np.ndarray | None = None,
     after: tuple[float, int] | None = None,
     filter_docs: DataFrame | None = None,
     deleted_docs: DataFrame | None = None,
@@ -819,70 +920,30 @@ def score_postings(
     """Per-bucket scoring plan over a postings table (per-leaf Scorer DAG +
     TopScoreDocCollector analog). Returns an un-merged DataFrame of local
     top-k (doc_id, score) rows; caller applies the global merge/limit.
-    ``deleted``: optional sorted int64 array of this segment's tombstoned
-    doc_ids, masked out BEFORE local top-k selection (liveDocs analog).
     ``after``: optional (score, doc_id) cursor applied before the local
     top-k (searchAfter paging).
     ``filter_docs``: optional (bucket, doc_id) DataFrame of docs passing a
-    filter query (fq). Cogrouped with the postings per bucket, so the
-    filter set never leaves the executors (the LRUQueryCache bitset
-    analog, distributed) — a bucket with no filter rows matches nothing.
-    ``deleted_docs``: optional (bucket, doc_id) DataFrame of tombstones —
-    the DISTRIBUTED liveDocs path (index/PendingDeletes.java analog): the
-    delete set rides the same cogroup slot as fq (tagged ``neg=true``) and
-    never touches the driver, so a 100 TB-scale delete backlog stays
-    per-(segment, bucket) on the executors."""
-    matched = sorted(idfs)
-
-    def score_bucket(pdf: pd.DataFrame) -> pd.DataFrame:
-        return _score_bucket(
-            pdf, idfs, cache, k, op, n_query_terms, avgdl, use_wand, deleted, after
-        )
-
-    rows = postings.filter(F.col("term").isin(matched))
-    if filter_docs is None and deleted_docs is None:
-        return rows.groupBy("bucket").applyInPandas(score_bucket, _TOPK_SCHEMA)
-
+    filter query (fq) — mask-only, stats untouched; a bucket with no fq
+    rows matches nothing. ``deleted_docs``: optional (bucket, doc_id)
+    DataFrame of this segment's tombstones — distributed liveDocs
+    (index/PendingDeletes.java analog). Both ride the one tagged side
+    channel of _bucket_plan, so they stay per-(segment, bucket) on the
+    executors (the LRUQueryCache bitset analog, distributed), and are
+    masked INSIDE the kernel so WAND's threshold never holds an excluded
+    doc."""
     has_filter = filter_docs is not None  # closures must not capture the DFs
-    right_df = None
-    if filter_docs is not None:
-        right_df = filter_docs.select(
-            "bucket", "doc_id", F.lit(False).alias("neg")
-        )
-    if deleted_docs is not None:
-        neg = deleted_docs.select("bucket", "doc_id", F.lit(True).alias("neg"))
-        right_df = neg if right_df is None else right_df.unionByName(neg)
 
-    def score_bucket_filtered(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
+    def leaf(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
         if not len(left):
-            return pd.DataFrame(
-                {"doc_id": np.array([], dtype=np.int64),
-                 "score": np.array([], dtype=np.float32)}
-            )
-        base = int(left["first_doc"].min())
-        allowed_rel = None
-        if has_filter:
-            allowed_rel = (
-                right.loc[~right["neg"], "doc_id"].to_numpy(dtype=np.int64)
-                - base
-            )
-        dele = deleted
-        extra = right.loc[right["neg"], "doc_id"].to_numpy(dtype=np.int64)
-        if extra.size:
-            # absolute ids, sorted — same contract as the `deleted` array;
-            # merged INSIDE the kernel so WAND's theta never holds a
-            # tombstoned doc (same guarantee as the driver-side path)
-            dele = np.sort(extra) if dele is None else np.union1d(dele, extra)
+            return _empty_topk()
+        _, allowed, deleted = _split_side(right, has_filter)
         return _score_bucket(
             left, idfs, cache, k, op, n_query_terms, avgdl, use_wand,
-            dele, after, allowed_rel=allowed_rel,
+            after, deleted, allowed,
         )
 
-    return (
-        rows.groupBy("bucket")
-        .cogroup(right_df.groupBy("bucket"))
-        .applyInPandas(score_bucket_filtered, _TOPK_SCHEMA)
-    )
+    rows = postings.filter(F.col("term").isin(sorted(idfs)))
+    return _bucket_plan(rows, leaf, filter_docs, deleted_docs)
 
 
 def score_query_postings(
@@ -891,7 +952,6 @@ def score_query_postings(
     idfs: dict[str, np.float32],
     cache: np.ndarray,
     k: int,
-    deleted: np.ndarray | None = None,
     positions: DataFrame | None = None,
     phrase_idfs: dict | None = None,
     caches: dict | None = None,
@@ -901,14 +961,9 @@ def score_query_postings(
     deleted_docs: DataFrame | None = None,
 ) -> DataFrame:
     """Per-bucket Boolean-tree scoring plan (Boolean2ScorerSupplier analog).
-    ``filter_docs``: optional (bucket, doc_id) fq set — same semantics as
-    score_postings: mask-only, stats untouched. Without phrases it rides
-    the free cogroup slot; with phrases its rows join the positions side
-    tagged with the impossible term '' and are split back in the leaf.
-    ``deleted_docs``: optional (bucket, doc_id) tombstone set — distributed
-    liveDocs (PendingDeletes analog): rides the cogroup slot tagged
-    ``neg=true`` (or, with phrases, the positions side tagged with the
-    impossible term '\\x00') so the delete backlog never reaches the driver.
+    ``filter_docs`` / ``deleted_docs``: optional (bucket, doc_id) fq and
+    tombstone sets — same semantics as score_postings, riding the same
+    tagged side channel (_bucket_plan) alongside any position rows.
     ``caches``/``phrase_caches``: optional per-term / per-Phrase norm-cache
     overrides (FieldedSearcher: each field has its own avgdl, so tagged
     terms score with their field's cache; default = ``cache``).
@@ -919,20 +974,21 @@ def score_query_postings(
     BooleanClause, search/PhraseWeight.java): pass the segment's
     ``positions`` table and ``phrase_idfs`` (Phrase node -> summed idf,
     float32; phrases with any absent term are simply omitted and match
-    nothing). The plan becomes a COGROUP of postings and positions on
-    ``bucket`` — both tables share the build-time doc-space bucketing, so
-    each leaf still sees a self-contained doc range and no shuffle joins
-    appear anywhere; phrase freqs are computed by the same vectorized
-    bucket kernel as phrase_topk (phrase.py#bucket_phrase_freqs)."""
+    nothing). The positions rows join the side channel, so each leaf still
+    sees a self-contained doc range and no shuffle joins appear anywhere;
+    phrase freqs are computed by the same vectorized bucket kernel as
+    phrase_topk (phrase.py#bucket_phrase_freqs)."""
     from .phrase import bucket_phrase_freqs, phrase_offsets
     from .query import eval_node
 
-    matched = sorted(idfs)
-    phrase_idfs = phrase_idfs or {}
-    # per-phrase leg layout + distinct terms, computed once driver-side
-    phrase_meta = {
-        p: (phrase_offsets(p.terms), sorted(set(p.terms))) for p in phrase_idfs
-    }
+    # per-phrase leg layout + distinct terms, computed once driver-side;
+    # without a positions table every Phrase clause matches nothing
+    phrase_meta = {}
+    if positions is not None:
+        phrase_meta = {
+            p: (phrase_offsets(p.terms), sorted(set(p.terms)))
+            for p in phrase_idfs or {}
+        }
     syn_idfs = syn_idfs or {}
     # Synonym leaves (query.py#Synonym): member terms must be scanned even
     # when they are not Term leaves; the kernel keeps their raw (tf, norm)
@@ -940,7 +996,6 @@ def score_query_postings(
     syn_meta = {s: sorted(set(s.terms)) for s in syn_idfs}
     syn_members = frozenset(t for ms in syn_meta.values() for t in ms)
     has_filter = filter_docs is not None  # closures must not capture the DFs
-    has_del = deleted_docs is not None
 
     def term_dense(pdf: pd.DataFrame, base: int, span: int):
         tscores: dict[str, np.ndarray] = {}
@@ -995,86 +1050,14 @@ def score_query_postings(
             smasks[node] = m
         return sscores, smasks
 
-    def local_topk(
-        mask: np.ndarray,
-        score: np.ndarray,
-        base: int,
-        allowed_rel: np.ndarray | None = None,
-        rel_deleted: np.ndarray | None = None,
-    ) -> pd.DataFrame:
-        if allowed_rel is not None:
-            allow = np.zeros(mask.size, dtype=bool)
-            ok = allowed_rel[(allowed_rel >= 0) & (allowed_rel < mask.size)]
-            allow[ok] = True
-            mask = mask & allow
-        if rel_deleted is not None and rel_deleted.size:
-            okd = rel_deleted[(rel_deleted >= 0) & (rel_deleted < mask.size)]
-            mask[okd] = False
-        if deleted is not None and deleted.size:
-            span = mask.size
-            rel_del = deleted[(deleted >= base) & (deleted < base + span)] - base
-            mask[rel_del] = False
-        nz = np.nonzero(mask)[0]
-        if nz.size == 0:
-            return pd.DataFrame(
-                {"doc_id": np.array([], dtype=np.int64),
-                 "score": np.array([], dtype=np.float32)}
-            )
-        scores = score[nz]
-        order = np.lexsort((nz, -scores))[: min(k, nz.size)]
-        return pd.DataFrame(
-            {"doc_id": (nz[order] + base).astype(np.int64),
-             "score": scores[order]}
-        )
-
-    def score_bucket(pdf: pd.DataFrame) -> pd.DataFrame:
-        base = int(pdf["first_doc"].min())
-        span = int(pdf["last_doc"].max()) - base + 1
-        tscores, tmasks, traw = term_dense(pdf, base, span)
-        sscores, smasks = syn_dense(traw, span)
-        mask, score = eval_node(
-            q, tscores, tmasks, span, sscores=sscores, smasks=smasks
-        )
-        return local_topk(mask, score, base)
-
-    def score_bucket_cogrouped(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
-        # bucket doc range from whichever side has rows (a pure-phrase tree
-        # has no Term-leaf postings; a term-only bucket has no positions)
-        lo, hi = [], []
-        if len(left):
-            lo.append(int(left["first_doc"].min()))
-            hi.append(int(left["last_doc"].max()))
-        if len(right):
-            lo.append(int(right["doc_id"].min()))
-            hi.append(int(right["doc_id"].max()))
-        if not lo:
-            return pd.DataFrame(
-                {"doc_id": np.array([], dtype=np.int64),
-                 "score": np.array([], dtype=np.float32)}
-            )
-        base = min(lo)
-        span = max(hi) - base + 1
-        rel_extra_del = None
-        if has_del:
-            dmask = right["term"] == "\x00"
-            rel_extra_del = (
-                right.loc[dmask, "doc_id"].to_numpy(dtype=np.int64) - base
-            )
-            right = right.loc[~dmask]
-        allowed_rel = None
-        if has_filter:
-            fmask = right["term"] == ""
-            allowed_rel = right.loc[fmask, "doc_id"].to_numpy(dtype=np.int64) - base
-            right = right.loc[~fmask]
-        tscores, tmasks, traw = term_dense(left, base, span)
-        sscores, smasks = syn_dense(traw, span)
+    def phrase_dense(pos: pd.DataFrame, base: int, span: int):
         pscores: dict = {}
         pmasks: dict = {}
         for p, (offs, dterms) in phrase_meta.items():
             sarr = np.zeros(span, dtype=np.float32)
             marr = np.zeros(span, dtype=bool)
-            if len(right):
-                sub = right[right["term"].isin(dterms)]
+            if len(pos):
+                sub = pos[pos["term"].isin(dterms)]
                 ids, freqs, norms = bucket_phrase_freqs(sub, offs, p.slop)
                 if ids.size:
                     pcch = phrase_caches.get(p, cache) if phrase_caches else cache
@@ -1087,89 +1070,41 @@ def score_query_postings(
                     marr[rel] = True
             pscores[p] = sarr
             pmasks[p] = marr
+        return pscores, pmasks
+
+    def leaf(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
+        pos, allowed, deleted = _split_side(right, has_filter)
+        # bucket doc range from whichever side has rows (a pure-phrase tree
+        # has no Term-leaf postings; a term-only bucket has no positions)
+        lo, hi = [], []
+        if len(left):
+            lo.append(int(left["first_doc"].min()))
+            hi.append(int(left["last_doc"].max()))
+        if len(pos):
+            lo.append(int(pos["doc_id"].min()))
+            hi.append(int(pos["doc_id"].max()))
+        if not lo:
+            return _empty_topk()
+        base = min(lo)
+        span = max(hi) - base + 1
+        tscores, tmasks, traw = term_dense(left, base, span)
+        sscores, smasks = syn_dense(traw, span)
+        pscores, pmasks = phrase_dense(pos, base, span)
         mask, score = eval_node(
             q, tscores, tmasks, span, pscores, pmasks, sscores, smasks
         )
-        return local_topk(mask, score, base, allowed_rel, rel_extra_del)
-
-    def score_bucket_filtered(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
-        # no phrases: the free cogroup slot carries the fq / tombstone sets
-        if not len(left):
-            return pd.DataFrame(
-                {"doc_id": np.array([], dtype=np.int64),
-                 "score": np.array([], dtype=np.float32)}
-            )
-        base = int(left["first_doc"].min())
-        span = int(left["last_doc"].max()) - base + 1
-        tscores, tmasks, traw = term_dense(left, base, span)
-        sscores, smasks = syn_dense(traw, span)
-        mask, score = eval_node(
-            q, tscores, tmasks, span, sscores=sscores, smasks=smasks
+        return _local_topk(
+            mask & ~_excluded(base, span, deleted, allowed), score, base, k
         )
-        allowed_rel = None
-        if has_filter:
-            allowed_rel = (
-                right.loc[~right["neg"], "doc_id"].to_numpy(dtype=np.int64)
-                - base
-            )
-        rel_extra_del = None
-        if has_del:
-            rel_extra_del = (
-                right.loc[right["neg"], "doc_id"].to_numpy(dtype=np.int64)
-                - base
-            )
-        return local_topk(mask, score, base, allowed_rel, rel_extra_del)
 
-    scan_terms = sorted(set(matched) | set(syn_members))
+    scan_terms = sorted(set(idfs) | set(syn_members))
     rows = postings.filter(F.col("term").isin(scan_terms))
-    if positions is None or not phrase_meta:
-        if filter_docs is None and deleted_docs is None:
-            return rows.groupBy("bucket").applyInPandas(score_bucket, _TOPK_SCHEMA)
-        right_df = None
-        if filter_docs is not None:
-            right_df = filter_docs.select(
-                "bucket", "doc_id", F.lit(False).alias("neg")
-            )
-        if deleted_docs is not None:
-            negs = deleted_docs.select(
-                "bucket", "doc_id", F.lit(True).alias("neg")
-            )
-            right_df = negs if right_df is None else right_df.unionByName(negs)
-        return (
-            rows.groupBy("bucket")
-            .cogroup(right_df.groupBy("bucket"))
-            .applyInPandas(score_bucket_filtered, _TOPK_SCHEMA)
-        )
-    pos_terms = sorted({t for _, dterms in phrase_meta.values() for t in dterms})
-    posrows = positions.filter(F.col("term").isin(pos_terms))
-    has_graph = "end_bin" in positions.columns  # synonym-graph index
-
-    def _markers(docs: DataFrame, tag: str) -> DataFrame:
-        cols = [
-            F.lit(tag).alias("term"),
-            F.col("bucket"),
-            F.col("doc_id"),
-            F.lit(0).alias("norm_byte"),
-            F.lit(None).cast("binary").alias("pos_bin"),
-        ]
-        if has_graph:
-            cols.append(F.lit(None).cast("binary").alias("end_bin"))
-        return docs.select(*cols)
-
-    if filter_docs is not None or deleted_docs is not None:
-        posrows = posrows.select(
-            "term", "bucket", "doc_id", "norm_byte", "pos_bin",
-            *(["end_bin"] if has_graph else []),
-        )
-        if filter_docs is not None:
-            posrows = posrows.unionByName(_markers(filter_docs, ""))
-        if deleted_docs is not None:
-            posrows = posrows.unionByName(_markers(deleted_docs, "\x00"))
-    return (
-        rows.groupBy("bucket")
-        .cogroup(posrows.groupBy("bucket"))
-        .applyInPandas(score_bucket_cogrouped, _TOPK_SCHEMA)
-    )
+    if phrase_meta:
+        pos_terms = sorted({t for _, dterms in phrase_meta.values() for t in dterms})
+        positions = positions.filter(F.col("term").isin(pos_terms))
+    else:
+        positions = None
+    return _bucket_plan(rows, leaf, filter_docs, deleted_docs, positions)
 
 
 def _decode_bins(doc_bin, freq_bin, norm_bin) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
@@ -1213,30 +1148,19 @@ def _score_bucket(
     n_query_terms: int,
     avgdl: float,
     use_wand: bool,
-    deleted: np.ndarray | None = None,
     after: tuple[float, int] | None = None,
-    allowed_rel: np.ndarray | None = None,
+    deleted: np.ndarray | None = None,
+    allowed: np.ndarray | None = None,
 ) -> pd.DataFrame:
     """Score one doc-space bucket (a 'leaf'). Returns its local top-k.
-    ``allowed_rel``: optional bucket-relative doc ids passing a filter
-    query (fq) — docs outside it are treated exactly like tombstones
-    (never match, never hold a pruning-threshold slot; corpus stats are
-    untouched, matching Solr's fq semantics)."""
+    ``after``: searchAfter cursor (see _local_topk). ``deleted`` /
+    ``allowed``: this bucket's tombstoned and fq-passing doc ids from the
+    side channel, masked by _excluded."""
     base = int(pdf["first_doc"].min())
     span = int(pdf["last_doc"].max()) - base + 1
     acc = np.zeros(span, dtype=np.float32)
     hit = np.zeros(span, dtype=np.int16)
-    if deleted is not None and deleted.size:
-        rel_deleted = deleted[(deleted >= base) & (deleted < base + span)] - base
-    else:
-        rel_deleted = np.array([], dtype=np.int64)
-    if allowed_rel is not None:
-        # fq mask -> excluded rel ids, merged into the tombstone set
-        allow_mask = np.zeros(span, dtype=bool)
-        ok = allowed_rel[(allowed_rel >= 0) & (allowed_rel < span)]
-        allow_mask[ok] = True
-        excluded = np.nonzero(~allow_mask)[0]
-        rel_deleted = np.union1d(rel_deleted, excluded)
+    excluded = _excluded(base, span, deleted, allowed)
     terms_sorted = sorted(idfs)  # lexicographic accumulation order (pinned)
     by_term = {t: g for t, g in pdf.groupby("term", sort=False)}
 
@@ -1268,10 +1192,7 @@ def _score_bucket(
         # valid lower bounds under AND because a partially-scored doc can
         # still fail the conjunction.)
         if any(by_term.get(t) is None for t in terms_sorted):
-            return pd.DataFrame(
-                {"doc_id": np.array([], dtype=np.int64),
-                 "score": np.array([], dtype=np.float32)}
-            )
+            return _empty_topk()
         arrs = {t: _term_arrays(by_term[t], base) for t in terms_sorted}
         by_rarity = sorted(terms_sorted, key=lambda t: int(arrs[t]["ndocs"]))
         cand: np.ndarray | None = None  # sorted rel doc ids still alive
@@ -1300,10 +1221,7 @@ def _score_bucket(
                 got.sort()
                 cand = got if cand is None else cand[np.isin(cand, got, assume_unique=True)]
             if cand.size == 0:
-                return pd.DataFrame(
-                    {"doc_id": np.array([], dtype=np.int64),
-                     "score": np.array([], dtype=np.float32)}
-                )
+                return _empty_topk()
     else:
         # ---- block-max WAND (columnar variant) -----------------------------
         # Upper bounds in float64 with a safety factor so float32 scoring can
@@ -1334,9 +1252,9 @@ def _score_bucket(
         suffix = np.concatenate([np.cumsum(ubs[::-1])[::-1], [0.0]])
         # span+1 so maximum.reduceat can take last_doc+1 == span boundaries
         wacc = np.zeros(span + 1, dtype=np.float64)  # pruning-side partials
-        # tombstoned docs must never hold a top-k slot in the pruning
+        # excluded docs must never hold a top-k slot in the pruning
         # threshold theta, else a live doc could be pruned wrongly
-        wacc[rel_deleted] = -np.inf
+        wacc[:span][excluded] = -np.inf
         for i, (t, ta, bub, _) in enumerate(term_rows):
             if span > 2 * k:
                 theta = np.partition(wacc[:span], span - k)[span - k]
@@ -1366,32 +1284,8 @@ def _score_bucket(
             acc[rel] += sc  # float32 in-place
             hit[rel] += 1
 
-    if op == "and":
-        mask = hit == n_query_terms
-    else:
-        mask = hit > 0
-    mask[rel_deleted] = False  # liveDocs exclusion (stats untouched, as Lucene)
-    nz = np.nonzero(mask)[0]
-    if nz.size == 0:
-        return pd.DataFrame({"doc_id": np.array([], dtype=np.int64), "score": np.array([], dtype=np.float32)})
-    scores = acc[nz]
-    if after is not None:
-        # searchAfter cursor: keep only hits strictly after (score, doc_id)
-        # in (score desc, doc_id asc) order — BEFORE the local top-k cap
-        a_s, a_d = np.float32(after[0]), int(after[1])
-        keep = (scores < a_s) | ((scores == a_s) & (nz + base > a_d))
-        nz, scores = nz[keep], scores[keep]
-        if nz.size == 0:
-            return pd.DataFrame(
-                {"doc_id": np.array([], dtype=np.int64),
-                 "score": np.array([], dtype=np.float32)}
-            )
-    kk = min(k, nz.size)
-    # top-k by (-score, doc_id): lexsort on (doc_id asc) then stable by -score
-    order = np.lexsort((nz, -scores))[:kk]
-    return pd.DataFrame(
-        {"doc_id": (nz[order] + base).astype(np.int64), "score": scores[order]}
-    )
+    mask = (hit == n_query_terms) if op == "and" else (hit > 0)
+    return _local_topk(mask & ~excluded, acc, base, k, after)
 
 
 def _score_bucket_sim(
@@ -1422,20 +1316,9 @@ def _score_bucket_sim(
             acc[rel] += sim.score_block(freqs, norms, st)
             hit[rel] += 1
     mask = (hit == n_query_terms) if op == "and" else (hit > 0)
-    if deleted is not None and len(deleted):
-        dele = np.asarray(deleted, dtype=np.int64)
-        rel_del = dele[(dele >= base) & (dele < base + span)] - base
-        mask[rel_del] = False  # liveDocs exclusion
-    nz = np.nonzero(mask)[0]
-    if nz.size == 0:
-        return pd.DataFrame(
-            {"doc_id": np.array([], dtype=np.int64), "score": np.array([], dtype=np.float32)}
-        )
-    scores = acc[nz]
-    order = np.lexsort((nz, -scores))[: min(k, nz.size)]
-    return pd.DataFrame(
-        {"doc_id": (nz[order] + base).astype(np.int64), "score": scores[order]}
-    )
+    if deleted is not None:
+        mask &= ~_excluded(base, span, np.asarray(deleted, dtype=np.int64))
+    return _local_topk(mask, acc, base, k)
 
 
 class MultiSearcher:
@@ -1471,11 +1354,11 @@ class MultiSearcher:
             self.doc_base[s.segment_id] = acc
             acc += s.stats.n_docs
         # Tombstones stay a DataFrame end-to-end (PendingDeletes analog,
-        # distributed): per-(segment, bucket) slices are cogrouped into the
-        # scorers exactly like fq_docs — never collected to the driver, so
-        # a 100 TB-scale delete backlog costs O(1) driver memory. isEmpty()
-        # is a limit-1 probe so delete-free catalogs skip the cogroup
-        # entirely (the common fast path).
+        # distributed): per-(segment, bucket) slices ride the scorers' one
+        # tagged side channel next to the fq sets (_bucket_plan) — never
+        # collected to the driver, so a 100 TB-scale delete backlog costs
+        # O(1) driver memory. isEmpty() is a limit-1 probe so delete-free
+        # catalogs skip the side channel entirely (the common fast path).
         self._deletes: DataFrame | None = None
         if deletes is not None and not deletes.isEmpty():
             self._deletes = deletes
@@ -1624,15 +1507,11 @@ class MultiSearcher:
         stats = self.term_stats(q_terms)
         matched = sorted(stats)
         if not matched or (op == "and" and len(matched) < len(q_terms)):
-            return self.spark.createDataFrame(
-                [], "segment_id string, doc_id long, gdoc_id long, score float"
-            )
+            return self.spark.createDataFrame([], _MULTI_SCHEMA)
         idfs = {t: np.float32(stats[t].idf) for t in matched}
         use_wand = mode == "wand"  # "and" routes to the BlockMaxConjunction branch
-
-        per_seg = []
-        for s in self.segments:
-            scored = score_postings(
+        return self._merge(
+            lambda s: score_postings(
                 s.table(self.spark, "postings"),
                 idfs,
                 self._cache,
@@ -1643,20 +1522,9 @@ class MultiSearcher:
                 use_wand,
                 deleted_docs=self._deleted_docs(s),
                 filter_docs=self._fq_docs(s, fq) if fq else None,
-            )
-            base = self.doc_base[s.segment_id]
-            per_seg.append(
-                scored.select(
-                    F.lit(s.segment_id).alias("segment_id"),
-                    "doc_id",
-                    (F.col("doc_id") + F.lit(base)).alias("gdoc_id"),
-                    "score",
-                )
-            )
-        u = per_seg[0]
-        for p in per_seg[1:]:
-            u = u.unionByName(p)
-        return u.orderBy(F.desc("score"), F.asc("gdoc_id")).limit(k)
+            ),
+            k,
+        )
 
     def topk_query(self, q, k: int = 10, fq: str | None = None) -> DataFrame:
         """Boolean-tree (and Phrase-clause) search across the catalog —
@@ -1665,14 +1533,7 @@ class MultiSearcher:
         scores are identical to a single merged index (ExactStatsCache);
         per-segment liveDocs excluded; merge tie-break (score desc,
         gdoc_id asc) as in topk."""
-        from .query import (
-            collect_fields,
-            collect_phrases,
-            collect_synonyms,
-            collect_term_leaves,
-            collect_terms,
-            rewrite,
-        )
+        from .query import collect_fields, collect_phrases, collect_terms, rewrite
 
         if collect_fields(q) - {None}:
             # same guard as Searcher: a field-scoped leaf would silently
@@ -1685,57 +1546,50 @@ class MultiSearcher:
         q = rewrite(q)
         phrases = collect_phrases(q)
         stats = self.term_stats(sorted(collect_terms(q)))
-        out_schema = "segment_id string, doc_id long, gdoc_id long, score float"
         if not stats:
-            return self.spark.createDataFrame([], out_schema)
-        leaf_terms = collect_term_leaves(q)
-        idfs = {
-            t: np.float32(stats[t].idf) for t in sorted(stats) if t in leaf_terms
-        }
-        # blended synonym idf from GLOBAL dfs — identical to a merged index
-        syn_idfs: dict = {}
-        for sq in set(collect_synonyms(q)):
-            dfs = [stats[t].df for t in set(sq.terms) if t in stats]
-            if dfs:
-                syn_idfs[sq] = np.float32(bm25.idf(self.n_docs, max(dfs)))
-        phrase_idfs: dict = {}
+            return self.spark.createDataFrame([], _MULTI_SCHEMA)
+        # GLOBAL dfs and N — identical to a merged index
+        idfs, syn_idfs, phrase_idfs = _tree_idfs(q, stats, self.n_docs)
         if phrases:
             assert all(s.has_table("positions") for s in self.segments), (
                 "phrase clauses need positional indexes in every segment"
             )
-            for p in set(phrases):
-                if all(t in stats for t in p.terms):
-                    phrase_idfs[p] = np.float32(
-                        sum(stats[t].idf for t in p.terms)
-                    )
-        per_seg = []
-        for s in self.segments:
-            positions = (
-                s.table(self.spark, "positions") if phrase_idfs else None
-            )
-            scored = score_query_postings(
+        return self._merge(
+            lambda s: score_query_postings(
                 s.table(self.spark, "postings"),
                 q,
                 idfs,
                 self._cache,
                 k,
                 deleted_docs=self._deleted_docs(s),
-                positions=positions,
+                positions=(
+                    s.table(self.spark, "positions") if phrase_idfs else None
+                ),
                 phrase_idfs=phrase_idfs,
                 filter_docs=self._fq_docs(s, fq) if fq else None,
                 syn_idfs=syn_idfs,
+            ),
+            k,
+        )
+
+    def _merge(self, per_segment, k: int) -> DataFrame:
+        """Global merge (TopDocs#merge): each segment's (doc_id, score)
+        frame ``per_segment(s)`` gains segment_id and gdoc_id = docBase +
+        doc_id; the union is ordered by (score desc, gdoc_id asc) and
+        limited to k."""
+        parts = [
+            per_segment(s).select(
+                F.lit(s.segment_id).alias("segment_id"),
+                "doc_id",
+                (F.col("doc_id") + F.lit(self.doc_base[s.segment_id])).alias(
+                    "gdoc_id"
+                ),
+                "score",
             )
-            base = self.doc_base[s.segment_id]
-            per_seg.append(
-                scored.select(
-                    F.lit(s.segment_id).alias("segment_id"),
-                    "doc_id",
-                    (F.col("doc_id") + F.lit(base)).alias("gdoc_id"),
-                    "score",
-                )
-            )
-        u = per_seg[0]
-        for p in per_seg[1:]:
+            for s in self.segments
+        ]
+        u = parts[0]
+        for p in parts[1:]:
             u = u.unionByName(p)
         return u.orderBy(F.desc("score"), F.asc("gdoc_id")).limit(k)
 
@@ -1768,9 +1622,8 @@ class MultiSearcher:
         score = boost, global doc order (docBase + local id); fq composes
         per segment like every scored path. Shared by the classic-parser
         `*:*` route and the CLI's local-params branch."""
-        parts = []
-        for s in self.segments:
-            base = self.doc_base[s.segment_id]
+
+        def live_docs(s: Segment) -> DataFrame:
             dm = s.stored_fields(self.spark).select("doc_id")
             dd = self._deleted_docs(s)
             if dd is not None:
@@ -1781,18 +1634,12 @@ class MultiSearcher:
                     "doc_id",
                     "left_semi",
                 )
-            parts.append(
-                dm.select(
-                    F.lit(s.segment_id).alias("segment_id"),
-                    "doc_id",
-                    (F.col("doc_id") + F.lit(base)).alias("gdoc_id"),
-                    F.lit(float(boost)).cast("float").alias("score"),
-                )
+            return dm.select(
+                "doc_id", F.lit(float(boost)).cast("float").alias("score")
             )
-        out = parts[0]
-        for p in parts[1:]:
-            out = out.unionByName(p)
-        return out.orderBy(F.asc("gdoc_id")).limit(k)
+
+        # constant score: the merge order reduces to gdoc_id asc
+        return self._merge(live_docs, k)
 
     def search(self, query_string: str, k: int = 10, fq: str | None = None) -> DataFrame:
         """Classic query string against the whole catalog — mirrors
@@ -1824,14 +1671,11 @@ def exhaustive_scores(searcher: Searcher, query_text: str, op: str = "or") -> Da
         # topk()'s early return so this debug oracle agrees with it
         return searcher.spark.createDataFrame([], _TOPK_SCHEMA)
     idfs = {t: np.float32(stats[t].idf) for t in matched}
-    cache = searcher._cache
-    big_k = searcher.stats.n_docs  # no truncation
-
-    def score_bucket(pdf: pd.DataFrame) -> pd.DataFrame:
-        return _score_bucket(pdf, idfs, cache, big_k, op, len(matched), searcher.stats.avgdl, False)
-
-    rows = searcher.postings.filter(F.col("term").isin(matched))
-    return rows.groupBy("bucket").applyInPandas(score_bucket, _TOPK_SCHEMA)
+    return score_postings(
+        searcher.postings, idfs, searcher._cache,
+        searcher.stats.n_docs,  # k = every doc: no truncation
+        op, len(matched), searcher.stats.avgdl, False,
+    )
 
 
 def sorted_index_topk(

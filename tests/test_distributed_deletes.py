@@ -25,6 +25,8 @@ from lucene_solr_spark.operators.search import MultiSearcher, Searcher
 from lucene_solr_spark.sources.catalog import Catalog, Segment, SegmentStats
 
 N_DOCS = 240
+# drops about half of every ranking, so a leaf that ignored the fq fails
+FQ_ODD = "doc_id % 2 = 1"
 
 
 @pytest.fixture(scope="module")
@@ -90,27 +92,43 @@ def deleted_keys(big_deletes):
     }
 
 
-def test_large_delete_set_topk(spark, cat2, big_deletes, deleted_keys):
+@pytest.fixture(scope="module")
+def fq_odd_dropped(cat2, deleted_keys):
+    """Keys FQ_ODD removes on top of the tombstones — its oracle, worked
+    out without the engine's fq path."""
+    return deleted_keys | {
+        (s.segment_id, d)
+        for s in cat2.segments()
+        for d in range(0, s.stats.n_docs, 2)
+    }
+
+
+def test_large_delete_set_topk(
+    spark, cat2, big_deletes, deleted_keys, fq_odd_dropped
+):
     ms_nodel = MultiSearcher(spark, cat2.segments())
     ms = MultiSearcher(spark, cat2.segments(), deletes=big_deletes)
     assert ms._deletes is not None  # DataFrame retained, not collected
     for q in ["import return def", "public self merge"]:
         for mode in ["wand", "exhaustive"]:
-            got = [
-                (r["segment_id"], int(r["doc_id"]), int(r["gdoc_id"]),
-                 float(r["score"]))
-                for r in ms.topk(q, k=10, mode=mode).collect()
-            ]
-            assert got == _expected_topk(ms_nodel, q, deleted_keys, 10), (
-                f"mismatch for {q!r} mode={mode}"
-            )
-            assert all((s, d) not in deleted_keys for s, d, _, _ in got)
+            for fq, dropped in [(None, deleted_keys), (FQ_ODD, fq_odd_dropped)]:
+                got = [
+                    (r["segment_id"], int(r["doc_id"]), int(r["gdoc_id"]),
+                     float(r["score"]))
+                    for r in ms.topk(q, k=10, mode=mode, fq=fq).collect()
+                ]
+                assert got == _expected_topk(ms_nodel, q, dropped, 10), (
+                    f"mismatch for {q!r} mode={mode} fq={fq!r}"
+                )
+                assert all((s, d) not in deleted_keys for s, d, _, _ in got)
 
 
-def test_large_delete_set_tree_phrase_fq(spark, cat2, big_deletes, deleted_keys):
-    """Boolean-tree path with a phrase clause AND an fq alongside the
-    tombstones — all three ride the same cogrouped positions side
-    (fq marker '', delete marker '\\x00')."""
+def test_large_delete_set_tree_phrase_fq(
+    spark, cat2, big_deletes, deleted_keys, fq_odd_dropped
+):
+    """Boolean-tree path with an fq alongside the tombstones, with and
+    without a phrase clause — position, fq and tombstone rows all ride
+    one cogrouped side channel, told apart by its tag column."""
     ms_nodel = MultiSearcher(spark, cat2.segments())
     ms = MultiSearcher(spark, cat2.segments(), deletes=big_deletes)
     q = '"import return" OR def'
@@ -123,6 +141,16 @@ def test_large_delete_set_tree_phrase_fq(spark, cat2, big_deletes, deleted_keys)
         ms_nodel, q, deleted_keys, 10, fq=fq, tree=True
     )
     assert got, "query must actually match something"
+    for q in ['"import return" OR def', "import OR def"]:
+        got = [
+            (r["segment_id"], int(r["doc_id"]), int(r["gdoc_id"]),
+             float(r["score"]))
+            for r in ms.search(q, k=10, fq=FQ_ODD).collect()
+        ]
+        assert got == _expected_topk(
+            ms_nodel, q, fq_odd_dropped, 10, tree=True
+        ), f"mismatch for {q!r}"
+        assert got, "query must actually match something"
 
 
 def test_purge_deletes_dataframe_path(spark, corpus, tmp_path):

@@ -9,6 +9,8 @@ exactly the results of the single-segment build over the same corpus.
 
 from __future__ import annotations
 
+import os
+
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
@@ -313,6 +315,11 @@ def test_catalog_merge_refuses_foreign_out_dir(spark, tmp_path):
             out_dir=str(tmp_path / "elsewhere"),
         )
     assert [s.segment_id for s in cat.segments()] == ["s0"]  # nothing lost
+    # other spellings of catalog.root name the catalog's own dir: accepted
+    for same in (root + os.sep, os.path.relpath(root)):
+        merged = merge_segments(spark, cat.segments(), catalog=cat, out_dir=same)
+        assert [s.segment_id for s in cat.segments()] == [merged.segment_id]
+        assert merged.stats.n_docs == 1
 
 
 def test_delete_by_query_idempotent(spark, tmp_path):

@@ -163,8 +163,8 @@ def test_qparser_phrase_on_graph_index(spark, seg_syn):
 
 
 def test_qparser_phrase_with_fq_on_graph_index(spark, seg_syn):
-    # fq rides the positions cogroup slot; the marker rows must match the
-    # graph schema (end_bin column) — exercises search.py#_markers
+    # fq rows share the side channel with the positions rows; they must
+    # fit the graph schema (end_bin column) — search.py#_bucket_plan
     from lucene_solr_spark.operators.search import Searcher
 
     s = Searcher(spark, seg_syn)
