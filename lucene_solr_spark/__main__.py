@@ -129,7 +129,7 @@ def _fetch_stored(spark, segs_by_id, wanted, fl):
 
 
 def _search(args) -> int:
-    from .operators.search import MultiSearcher, Searcher
+    from .operators.search import MultiSearcher
     from .session import get_spark
 
     cat = _require_index(args.index)
@@ -219,8 +219,7 @@ def _search(args) -> int:
         hits = edismax_topk(spark, {"content": list(segs)}, params, k=args.k)
     elif getattr(args, "deftype", "lucene") == "surround":
         # {!surround} request: W/N distance ops + truncation on the span
-        # kernel (operators/surround.py); single merged segment like the
-        # other positional front ends
+        # kernel (operators/surround.py)
         from .operators.spans import span_topk
         from .operators.surround import SurroundParseError, parse_surround
 
@@ -231,22 +230,19 @@ def _search(args) -> int:
                 file=sys.stderr,
             )
             return 2
+        # truncation expands against the UNION terms dict; the span
+        # kernel takes the segment list (global stats) sharing ONE flat
+        # doc-id space — ranges must be disjoint
         segs = cat.segments()
-        if len(segs) == 1:
-            ex = Searcher(spark, segs[0]).expand_terms
-        else:
-            # multi-segment: truncation expands against the UNION terms
-            # dict; the span kernel takes the segment list (global stats)
-            # sharing ONE flat doc-id space — ranges must be disjoint
-            if not _disjoint_doc_ids(spark, segs):
-                print(
-                    json.dumps({"error": "segments' doc-id ranges overlap; "
-                                "surround needs one global doc-id space — "
-                                "run merge"}),
-                    file=sys.stderr,
-                )
-                return 2
-            ex = MultiSearcher.from_catalog(spark, cat).expand_terms
+        if len(segs) > 1 and not _disjoint_doc_ids(spark, segs):
+            print(
+                json.dumps({"error": "segments' doc-id ranges overlap; "
+                            "surround needs one global doc-id space — "
+                            "run merge"}),
+                file=sys.stderr,
+            )
+            return 2
+        ex = MultiSearcher.from_catalog(spark, cat).expand_terms
         try:
             node = parse_surround(
                 args.query, expand=lambda pfx: ex(prefix=pfx)
@@ -265,8 +261,6 @@ def _search(args) -> int:
     elif getattr(args, "deftype", "lucene") == "xmlparser":
         # {!xmlparser} request: XML element tree -> engine Boolean tree,
         # evaluated across the WHOLE catalog (MultiSearcher, global stats)
-        from pyspark.sql import functions as F
-
         from .operators.query import Bool
         from .operators.xmlparser import parse_xml_query
 
@@ -278,39 +272,12 @@ def _search(args) -> int:
             return 2
         ms = MultiSearcher.from_catalog(spark, cat)
         if tree == Bool():
-            # top-level MatchAllDocsQuery: every LIVE doc (tombstones
-            # anti-joined away), constant score 1.0, gdoc order
-            deletes = cat.deletes(spark)
-            parts = []
-            for seg in ms.segments:
-                dm = seg.table(spark, "docmap")
-                if args.fq:
-                    # fq applies to match-all exactly as on the scored
-                    # path: a SQL predicate over the stored fields
-                    dm = dm.filter(F.expr(args.fq))
-                dm = dm.select("doc_id").join(
-                    deletes.filter(
-                        F.col("segment_id") == seg.segment_id
-                    ).select("doc_id"),
-                    "doc_id",
-                    "left_anti",
-                )
-                parts.append(
-                    dm.select(
-                        F.lit(seg.segment_id).alias("segment_id"),
-                        F.col("doc_id").alias("local_id"),
-                        (F.col("doc_id") + F.lit(ms.doc_base[seg.segment_id]))
-                        .alias("doc_id"),
-                        F.lit(1.0).cast("float").alias("score"),
-                    )
-                )
-            hits = parts[0]
-            for pt in parts[1:]:
-                hits = hits.unionByName(pt)
-            hits = hits.orderBy("doc_id").limit(args.k)
+            # top-level MatchAllDocsQuery: every LIVE doc, constant score
+            # 1.0, gdoc order; fq composes as on the scored path
+            hits = ms.matchall_topk(k=args.k, fq=args.fq)
         else:
             hits = ms.topk_query(tree, k=args.k, fq=args.fq)
-            printed = "gdoc_id"  # same values the rename used to print
+        printed = "gdoc_id"
     elif (
         getattr(args, "deftype", "lucene") in ("simple", "maxscore")
         or args.query.lstrip().startswith("{!")
@@ -352,7 +319,7 @@ def _search(args) -> int:
         if collect_fields(node) - {None}:
             # a field-scoped leaf (e.g. {!term f=lang}) would otherwise be
             # looked up in the single text field's postings — silently
-            # scoring the wrong field. Refuse like Searcher.topk_query;
+            # scoring the wrong field. Refuse like MultiSearcher.topk_query;
             # use --fq for stored-field predicates.
             print(
                 json.dumps({"error": "field-scoped clauses are not served "
@@ -364,21 +331,16 @@ def _search(args) -> int:
         hits = ms.topk_query(node, k=args.k, fq=args.fq)
         printed = "gdoc_id"
     elif getattr(args, "synonyms", None):
-        # query-time synonym expansion against the plain index
+        # query-time synonym expansion against the plain catalog
+        # (global stats, liveDocs excluded)
         from .functions.synonyms import parse_synonym_rules
 
-        segs = cat.segments()
-        if len(segs) != 1:
-            print(
-                json.dumps({"error": "synonym CLI needs one segment; run merge"}),
-                file=sys.stderr,
-            )
-            return 2
         with open(args.synonyms) as f:
             rules = parse_synonym_rules(f.read().splitlines())
-        hits = Searcher(spark, segs[0]).search_synonyms(
+        hits = MultiSearcher.from_catalog(spark, cat).search_synonyms(
             args.query, rules, k=args.k, fq=args.fq
         )
+        printed = "gdoc_id"
     else:
         from .plans.qparser import QueryParseError
 
@@ -402,16 +364,15 @@ def _search(args) -> int:
             # the fetch is keyed by the SAME pair, not the printed id —
             # on the classic multi-segment path two segments can print
             # equal local doc_ids and must not swap stored fields
-            local_col = "local_id" if "local_id" in cols else "doc_id"
-            row_key = lambda r: (r["segment_id"], int(r[local_col]))  # noqa: E731
+            row_key = lambda r: (r["segment_id"], int(r["doc_id"]))  # noqa: E731
             for r in rows:
-                wanted.setdefault(r["segment_id"], {})[int(r[local_col])] = (
+                wanted.setdefault(r["segment_id"], {})[int(r["doc_id"])] = (
                     row_key(r)
                 )
         else:
             # flat doc-id space: edismax/surround serve it only after the
-            # disjoint-ranges guard, and the synonym path is single-
-            # segment, so a raw id matches in at most one docmap
+            # disjoint-ranges guard, so a raw id matches in at most one
+            # docmap
             row_key = lambda r: int(r[printed])  # noqa: E731
             for sid in segs_by_id:
                 wanted[sid] = {int(r[printed]): int(r[printed]) for r in rows}

@@ -5,10 +5,15 @@ Reference lifecycle being re-expressed (SURVEY.md §3.1):
   (TermScorer / WANDScorer + ImpactsDISI block skipping)
   -> TopScoreDocCollector per leaf -> TopDocs#merge
 
+One searcher: ``MultiSearcher`` serves a catalog of segments (Lucene's
+IndexSearcher over an N-leaf reader); ``Searcher`` is its one-segment
+case, reporting (doc_id, score) since a lone segment's gdoc_id is its
+doc_id. Each segment's tables are opened once per searcher.
+
 Spark restatement:
-  * stats pre-pass: query-term rows from the ``terms`` table (tiny collect —
-    the broadcast side of the plan; ExactStatsCache analog is free because
-    our stats are global by construction).
+  * stats pre-pass: the query terms' (term, df) rows of every segment's
+    ``terms`` table, collected and summed on the driver (at most terms x
+    segments rows — the ExactStatsCache analog, global by construction).
   * postings scan: ``postings.filter(term.isin(...))`` — the postings table
     is range-partitioned + sorted by term, so parquet row-group min/max stats
     prune everything else (the FST terms-index analog).
@@ -16,8 +21,9 @@ Spark restatement:
     bucket fixed at build time — every term's blocks are aligned to it, so a
     bucket is a self-contained "leaf"). Inside: numpy decode + float32 BM25,
     optionally with block-max pruning (WAND analog — see ``_score_bucket``).
-  * merge: per-bucket top-k -> global ``orderBy(score desc, doc_id asc)
-    .limit(k)`` — TopDocs#merge with the pinned tie-break.
+  * merge: per-bucket top-k -> global ``orderBy(score desc, gdoc_id asc)
+    .limit(k)`` over the segments (gdoc_id = docBase + doc_id) —
+    TopDocs#merge with the pinned tie-break.
   * late materialization: display fields joined from ``docmap`` only AFTER
     the limit (QueryComponent#distributedProcess two-phase retrieval analog).
 
@@ -104,8 +110,8 @@ def _osa_udf(query_term: str):
 
 
 def _apply_term_patterns(t, prefix, wildcard, fuzzy, regexp, term_range):
-    """Shared MultiTermQuery predicate set over a terms-dict DataFrame
-    (used by Searcher.expand_terms and MultiSearcher.expand_terms)."""
+    """MultiTermQuery predicate set over a terms-dict DataFrame (used by
+    MultiSearcher.expand_terms)."""
     if prefix is not None:
         t = t.filter(F.col("term").startswith(prefix))
     if wildcard is not None:
@@ -227,23 +233,208 @@ class QueryResultCache:
             self._entries.popitem(last=False)
 
 
-class Searcher:
-    def __init__(self, spark: SparkSession, segment: Segment):
+class MultiSearcher:
+    """Search across a catalog of segments — the Solr distributed-select
+    analog (SURVEY.md §3.2: QueryComponent#distributedProcess + mergeIds)
+    and Lucene's IndexSearcher over an N-leaf MultiReader/TopDocs#merge.
+    A single segment is the one-leaf case (``Searcher``).
+
+    Semantics pinned to Lucene:
+    - corpus stats are GLOBAL: N = sum of segment docCounts, avgdl from the
+      summed totals, df(t) = sum of per-segment df — the ExactStatsCache
+      analog, free here because the terms tables are just unioned+summed.
+    - deleted docs are EXCLUDED from results but still counted in stats
+      until a merge rewrites the segment (liveDocs semantics).
+    - merge tie-break: score desc, then global doc order = (segment order,
+      local doc_id) — Lucene's leaf-ordered docBase + docID.
+
+    Result columns: (segment_id, doc_id, gdoc_id, score) where gdoc_id =
+    segment docBase + local doc_id.
+    """
+
+    _SCHEMA = _MULTI_SCHEMA
+
+    def __init__(self, spark: SparkSession, segments: list[Segment], deletes: DataFrame | None = None):
+        if not segments:
+            raise ValueError("MultiSearcher needs at least one segment")
         self.spark = spark
-        self.segment = segment
-        self.stats = segment.stats
-        self.postings = segment.table(spark, "postings")
-        self.terms = segment.table(spark, "terms")
-        self.docmap = segment.table(spark, "docmap")
-        self._cache = bm25.norm_cache(self.stats.avgdl)
+        self.segments = segments
+        n_docs = sum(s.stats.n_docs for s in segments)
+        sum_ttf = sum(s.stats.sum_ttf for s in segments)
+        self.n_docs = n_docs
+        self.avgdl = sum_ttf / n_docs if n_docs else 0.0
+        self._cache = bm25.norm_cache(self.avgdl)
+        self.doc_base = {}
+        acc = 0
+        for s in segments:
+            self.doc_base[s.segment_id] = acc
+            acc += s.stats.n_docs
+        # Tombstones stay a DataFrame end-to-end (PendingDeletes analog,
+        # distributed): per-(segment, bucket) slices ride the scorers' one
+        # tagged side channel next to the fq sets (_bucket_plan) — never
+        # collected to the driver, so a 100 TB-scale delete backlog costs
+        # O(1) driver memory. isEmpty() is a limit-1 probe so delete-free
+        # catalogs skip the side channel entirely (the common fast path).
+        self._deletes: DataFrame | None = None
+        if deletes is not None and not deletes.isEmpty():
+            self._deletes = deletes
+        # shards.tolerant bookkeeping (set by from_catalog(tolerant=True))
+        self.skipped: list[tuple[str, str]] = []
+        self.partial_results = False
+        # per-(segment, fq) materialized DocSets (the Searcher FilterCache
+        # analog): repeated filters skip the stored-fields scan per query
         self.filter_cache = FilterCache()
         self.result_cache: QueryResultCache | None = None
+        self.bloom = None
+        # tables opened on first use, then reused by every query
+        self._opened: dict[tuple[str, str], DataFrame] = {}
+        self._terms_union: DataFrame | None = None
+
+    def _table(self, s: Segment, name: str) -> DataFrame:
+        """Segment ``s``'s table ``name``, opened once per searcher — the
+        SegmentReader opened once per IndexSearcher. Segments are
+        immutable, so one read (file listing + schema inference) serves
+        every later query; a reopen builds a new searcher."""
+        key = (s.segment_id, name)
+        if key not in self._opened:
+            self._opened[key] = s.table(self.spark, name)
+        return self._opened[key]
+
+    def _empty(self) -> DataFrame:
+        return self.spark.createDataFrame([], self._SCHEMA)
+
+    def _fq_docs(self, s: Segment, fq: str) -> DataFrame:
+        return self.filter_cache.get_or_build(
+            (s.segment_id, fq), lambda: build_fq_docs(self.spark, s, fq)
+        )
+
+    def _deleted_docs(self, s: Segment) -> DataFrame | None:
+        """This segment's tombstones as a (bucket, doc_id) DataFrame sharing
+        the build-time doc-space bucketing, or None when the catalog has no
+        deletes at all."""
+        if self._deletes is None:
+            return None
+        bd = s.stats.bucket_docs
+        return self._deletes.filter(
+            F.col("segment_id") == s.segment_id
+        ).select(
+            F.floor(F.col("doc_id") / bd).cast("long").alias("bucket"),
+            "doc_id",
+        )
+
+    @classmethod
+    def from_catalog(
+        cls, spark: SparkSession, catalog, tolerant: bool = False
+    ) -> "MultiSearcher":
+        """``tolerant`` is solr's shards.tolerant=true
+        (HttpShardHandler/SearchHandler: a failed shard is skipped and the
+        response carries partialResults=true instead of propagating the
+        error; the default re-raises like shards.tolerant=false). A
+        segment "fails" when a required table's completeness marker is
+        missing — the per-table _SUCCESS marker is this engine's analog
+        of the reference's per-file checksum validation at reader-open
+        (index/SegmentInfos.java read path). Skipped segments are listed
+        on ``.skipped`` (segment_id, reason) and ``.partial_results`` is
+        set — surfaced, not logged."""
+        segs = catalog.segments()
+        if not tolerant:
+            return cls(spark, segs, deletes=catalog.deletes(spark))
+        ok: list[Segment] = []
+        skipped: list[tuple[str, str]] = []
+        for s in segs:
+            reason = cls._validate_segment(s)
+            if reason is None:
+                ok.append(s)
+            else:
+                skipped.append((s.segment_id, reason))
+        if not ok:
+            raise RuntimeError(
+                "shards.tolerant: every segment failed validation: "
+                + "; ".join(f"{sid}: {r}" for sid, r in skipped)
+            )
+        ms = cls(spark, ok, deletes=catalog.deletes(spark))
+        ms.skipped = skipped
+        ms.partial_results = bool(skipped)
+        return ms
+
+    @staticmethod
+    def _validate_segment(s: Segment) -> str | None:
+        """None when servable; else the skip reason. In-memory (NRT)
+        segments are live by construction."""
+        for t in ("terms", "postings", "docmap"):
+            if not s.has_table(t):
+                return f"missing table {t!r}"
+        return None
+
+    def _all_terms(self) -> DataFrame:
+        """Every segment's (term, df) rows as ONE scan, opened once: all
+        on-disk segments go through a single multi-path parquet read (one
+        FileScan node — plan size constant in segment count, the
+        index/MultiTermsEnum.java merged enum), with in-memory (NRT,
+        unflushed) segments unioned on top. At a thousand segments this
+        keeps plan compilation O(1) instead of O(segments) union nodes. A
+        lone on-disk segment reuses its own opened terms table."""
+        if self._terms_union is None:
+            on_disk = [bool(s.path) and "terms" not in s.dfs for s in self.segments]
+            scan = sum(on_disk) > 1
+            parts = [self.spark.read.parquet(*(
+                os.path.join(s.path, "terms")
+                for s, d in zip(self.segments, on_disk) if d
+            ))] if scan else []
+            parts += [
+                self._table(s, "terms")
+                for s, d in zip(self.segments, on_disk) if not (scan and d)
+            ]
+            u = parts[0].select("term", "df")
+            for p in parts[1:]:
+                u = u.unionByName(p.select("term", "df"))
+            self._terms_union = u
+        return self._terms_union
+
+    def attach_bloom(self, bloom=None, fp: float = 0.01):
+        """Attach a terms bloom filter (functions/bloom.py — the
+        BloomFilteringPostingsFormat analog) over the union of the
+        segments' terms: all-absent queries then skip the stats pre-pass
+        and every scoring job, answered on the driver. Built over a
+        one-table view of ``_all_terms`` if not given; its size hint is
+        the summed per-segment term counts (the union's row count)."""
+        if bloom is None:
+            from ..functions.bloom import TermBloom
+            from ..sources.catalog import SegmentStats
+
+            union = Segment(
+                "terms-union",
+                SegmentStats(n_terms=sum(s.stats.n_terms for s in self.segments)),
+                dfs={"terms": self._all_terms()},
+            )
+            bloom = TermBloom.build(self.spark, union, fp=fp)
+        self.bloom = bloom
+        return bloom
+
+    def term_stats(self, terms: list[str]) -> dict[str, TermStats]:
+        """Global df per query term (phase 0, the Weight stats pre-pass):
+        the query terms' (term, df) rows of every segment, collected and
+        summed on the driver — at most terms x segments rows, and no
+        aggregation job."""
+        if not terms:
+            return {}
+        if self.bloom is not None:
+            terms = [t for t in terms if self.bloom.might_contain(t)]
+            if not terms:  # no false negatives -> absent in EVERY segment
+                return {}
+        dfs: dict[str, int] = {}
+        for r in self._all_terms().filter(F.col("term").isin(terms)).collect():
+            dfs[r["term"]] = dfs.get(r["term"], 0) + int(r["df"])
+        return {
+            t: TermStats(term=t, df=df, idf=bm25.idf(self.n_docs, df))
+            for t, df in dfs.items()
+        }
 
     def enable_result_cache(
         self, max_entries: int = 64, window: int = 50
     ) -> QueryResultCache:
-        """Turn on the queryResultCache (off by default — a Searcher over
-        a mutating catalog must invalidate by building a new Searcher,
+        """Turn on the queryResultCache (off by default — a searcher over
+        a mutating catalog must invalidate by building a new searcher,
         exactly Solr's new-searcher-per-commit discipline)."""
         self.result_cache = QueryResultCache(max_entries, window)
         return self.result_cache
@@ -261,49 +452,7 @@ class Searcher:
             fetched = run(wk).collect()
             rc.put(key, fetched, complete=len(fetched) < wk)
             rows = fetched[:k]
-        return self.spark.createDataFrame(rows, _TOPK_SCHEMA)
-
-    # -- Weight#createWeight analog: per-query stats pre-pass ---------------
-    def attach_bloom(self, bloom=None, fp: float = 0.01):
-        """Attach a terms bloom filter (functions/bloom.py — the
-        BloomFilteringPostingsFormat analog): absent-term queries then skip
-        the terms-dict scan AND the scoring job entirely, answered on the
-        driver. Build one if not given."""
-        if bloom is None:
-            from ..functions.bloom import TermBloom
-
-            bloom = TermBloom.build(self.spark, self.segment, fp=fp)
-        self.bloom = bloom
-        return bloom
-
-    def term_stats(self, terms: list[str]) -> dict[str, TermStats]:
-        if not terms:
-            return {}
-        bloom = getattr(self, "bloom", None)
-        if bloom is not None:
-            terms = [t for t in terms if bloom.might_contain(t)]
-            if not terms:  # no false negatives -> truly absent, zero jobs
-                return {}
-        rows = self.terms.filter(F.col("term").isin(terms)).collect()
-        out = {}
-        for r in rows:
-            out[r["term"]] = TermStats(
-                term=r["term"], df=int(r["df"]), idf=bm25.idf(self.stats.n_docs, int(r["df"]))
-            )
-        return out
-
-    def fq_docs(self, fq: str) -> DataFrame:
-        """Materialize (and cache) the doc-id set of a filter query over
-        the stored fields — Solr's fq / Lucene's LRUQueryCache bitset.
-        ``fq`` is a SQL predicate over docmap columns (e.g.
-        ``"lang = 'python'"``); the set is keyed per bucket so the scorer
-        cogroups it without ever collecting it to the driver. Predicates
-        touching only stored columns run against the raw stored-fields
-        table (join-free plan); only dl/norm_byte predicates pay the lazy
-        norms join."""
-        return self.filter_cache.get_or_build(
-            ("fq", fq), lambda: build_fq_docs(self.spark, self.segment, fq)
-        )
+        return self.spark.createDataFrame(rows, self._SCHEMA)
 
     def topk(
         self,
@@ -312,148 +461,220 @@ class Searcher:
         mode: str = "wand",
         op: str = "or",
         fq: str | None = None,
+        after: tuple[float, int] | None = None,
     ) -> DataFrame:
         """Top-k BM25. ``mode``: 'wand' (block-max pruning) or 'exhaustive'.
         ``op``: 'or' (disjunction, sum of matching terms) or 'and'
         (conjunction: doc must contain every query term). ``fq``: optional
         filter query — SQL predicate over stored fields; restricts matches
-        without touching scores or corpus stats (Solr fq semantics)."""
+        without touching scores or corpus stats (Solr fq semantics).
+
+        ``after``: searchAfter deep paging (search/IndexSearcher.java
+        #searchAfter, Solr cursorMark) — the k hits strictly after the
+        cursor ``(score, gdoc_id)`` in (score desc, gdoc_id asc) order,
+        keyset pagination with no offset scan. Each segment applies
+        ``(score, gdoc_id - docBase)`` INSIDE its per-bucket scorer before
+        the local top-k, so a bucket emits at most k rows and per-page
+        cost stays proportional to k. WAND stays off under a cursor: its
+        threshold prunes exactly the below-cursor region a page needs."""
         if mode not in ("wand", "exhaustive"):
             raise ValueError(f"mode must be 'wand' or 'exhaustive', got {mode!r}")
         if op not in ("or", "and"):
             raise ValueError(f"op must be 'or' or 'and', got {op!r}")
-        if self.result_cache is not None:
-            key = ("topk", query_text, mode, op, fq)
-            return self._cached_topk(
-                key, k, lambda kk: self._topk_run(query_text, kk, mode, op, fq)
-            )
-        return self._topk_run(query_text, k, mode, op, fq)
+        return self._cached_topk(
+            ("topk", query_text, mode, op, fq, after), k,
+            lambda kk: self._topk_run(query_text, kk, mode, op, fq, after),
+        )
+
+    def topk_after(
+        self, query_text: str, after: tuple[float, int], k: int = 10, **kw
+    ) -> DataFrame:
+        """``topk(query_text, k, after=after, ...)``."""
+        return self.topk(query_text, k, after=after, **kw)
 
     def _topk_run(
-        self, query_text: str, k: int, mode: str, op: str, fq: str | None
+        self, query_text: str, k: int, mode: str, op: str, fq: str | None,
+        after: tuple[float, int] | None,
     ) -> DataFrame:
         q_terms = sorted(set(tokenize_text(query_text)))
         stats = self.term_stats(q_terms)
         matched = sorted(stats)  # lexicographic — pinned summation order
         if not matched or (op == "and" and len(matched) < len(q_terms)):
-            return self.spark.createDataFrame([], _TOPK_SCHEMA)
-
+            return self._empty()
         idfs = {t: np.float32(stats[t].idf) for t in matched}
-        use_wand = mode == "wand"  # "and" routes to the BlockMaxConjunction branch
-        per_bucket = score_postings(
-            self.postings,
-            idfs,
-            self._cache,
+        # "and" routes to the BlockMaxConjunction branch
+        use_wand = mode == "wand" and after is None
+        return self._merge(
+            lambda s: score_postings(
+                self._table(s, "postings"),
+                idfs,
+                self._cache,
+                k,
+                op,
+                len(q_terms),
+                self.avgdl,
+                use_wand,
+                after=None if after is None else (
+                    float(after[0]), int(after[1]) - self.doc_base[s.segment_id]
+                ),
+                deleted_docs=self._deleted_docs(s),
+                filter_docs=self._fq_docs(s, fq) if fq else None,
+            ),
             k,
-            op,
-            len(q_terms),
-            self.stats.avgdl,
-            use_wand,
-            filter_docs=self.fq_docs(fq) if fq else None,
         )
-        return per_bucket.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
 
     def topk_query(self, q, k: int = 10, fq: str | None = None) -> DataFrame:
-        """Top-k BM25 for a Boolean query tree (operators/query.py) — the
-        IndexSearcher#search(BooleanQuery) analog. The tree (nested bool,
-        minShouldMatch, per-clause boost, MUST_NOT, FILTER, Phrase clauses)
-        is evaluated vectorized inside the per-bucket leaf; same
-        merge/tie-break as the flat path. Reference: search/BooleanQuery.java,
-        Boolean2ScorerSupplier.java, MinShouldMatchSumScorer.java,
-        PhraseQuery.java (phrase as a BooleanClause)."""
-        if self.result_cache is not None:
-            # frozen-dataclass trees have a stable canonical repr
-            key = ("tree", repr(q), fq)
-            return self._cached_topk(
-                key, k, lambda kk: self._topk_query_run(q, kk, fq)
-            )
-        return self._topk_query_run(q, k, fq)
+        """Boolean-tree (and Phrase-clause) search — the IndexSearcher
+        #search(BooleanQuery) analog. The tree (nested bool,
+        minShouldMatch, per-clause boost, MUST_NOT, FILTER, Phrase and
+        Synonym clauses) is evaluated vectorized inside the per-bucket
+        leaf. Global stats (summed df / N / avgdl) feed EVERY segment's
+        leaf scorer, so scores are identical to a single merged index
+        (ExactStatsCache); per-segment liveDocs excluded; merge tie-break
+        (score desc, gdoc_id asc) as in topk. Reference:
+        search/BooleanQuery.java, Boolean2ScorerSupplier.java,
+        MinShouldMatchSumScorer.java, PhraseQuery.java."""
+        # frozen-dataclass trees have a stable canonical repr
+        return self._cached_topk(
+            ("tree", repr(q), fq), k,
+            lambda kk: self._topk_query_run(q, kk, fq),
+        )
 
     def _topk_query_run(self, q, k: int, fq: str | None) -> DataFrame:
         from .query import collect_fields, collect_phrases, collect_terms, rewrite
 
-        q = rewrite(q)
         if collect_fields(q) - {None}:
+            # a field-scoped leaf would silently score against the single
+            # indexed text field (wrong field, wrong results)
             raise ValueError(
-                "field-scoped query on a single-field Searcher — use "
-                "operators.fields.FieldedSearcher"
+                f"field-scoped query on a single-field {type(self).__name__}"
+                " — use operators.fields.FieldedSearcher"
             )
+        q = rewrite(q)
         phrases = collect_phrases(q)
         stats = self.term_stats(sorted(collect_terms(q)))
         if not stats:
-            return self.spark.createDataFrame([], _TOPK_SCHEMA)
-        idfs, syn_idfs, phrase_idfs = _tree_idfs(q, stats, self.stats.n_docs)
-        positions = None
+            return self._empty()
+        # GLOBAL dfs and N — identical to a merged index
+        idfs, syn_idfs, phrase_idfs = _tree_idfs(q, stats, self.n_docs)
         if phrases:
-            assert self.segment.has_table("positions"), (
-                "phrase clauses need a positional index "
+            assert all(s.has_table("positions") for s in self.segments), (
+                "phrase clauses need a positional index in every segment "
                 "(build_index(with_positions=True))"
             )
-            positions = self.segment.table(self.spark, "positions")
-        per_bucket = score_query_postings(
-            self.postings, q, idfs, self._cache, k,
-            positions=positions, phrase_idfs=phrase_idfs,
-            filter_docs=self.fq_docs(fq) if fq else None,
-            syn_idfs=syn_idfs,
+        return self._merge(
+            lambda s: score_query_postings(
+                self._table(s, "postings"),
+                q,
+                idfs,
+                self._cache,
+                k,
+                deleted_docs=self._deleted_docs(s),
+                positions=(
+                    self._table(s, "positions") if phrase_idfs else None
+                ),
+                phrase_idfs=phrase_idfs,
+                filter_docs=self._fq_docs(s, fq) if fq else None,
+                syn_idfs=syn_idfs,
+            ),
+            k,
         )
-        return per_bucket.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
+
+    def _merge(self, per_segment, k: int) -> DataFrame:
+        """Global merge (TopDocs#merge): each segment's (doc_id, score)
+        frame ``per_segment(s)`` gains segment_id and gdoc_id = docBase +
+        doc_id; the union is ordered by (score desc, gdoc_id asc) and
+        limited to k."""
+        parts = [
+            per_segment(s).select(
+                F.lit(s.segment_id).alias("segment_id"),
+                "doc_id",
+                (F.col("doc_id") + F.lit(self.doc_base[s.segment_id])).alias(
+                    "gdoc_id"
+                ),
+                "score",
+            )
+            for s in self.segments
+        ]
+        u = parts[0]
+        for p in parts[1:]:
+            u = u.unionByName(p)
+        return u.orderBy(F.desc("score"), F.asc("gdoc_id")).limit(k)
+
+    def expand_terms(
+        self,
+        prefix: str | None = None,
+        wildcard: str | None = None,
+        fuzzy: tuple[str, int] | None = None,
+        regexp: str | None = None,
+        term_range: tuple[str | None, str | None] | None = None,
+        max_expansions: int = 1024,
+    ) -> list[str]:
+        """MultiTermQuery rewrite (CONSTANT_SCORE_REWRITE): expand a
+        pattern against the UNION of every segment's terms dictionary
+        (index/MultiTermsEnum.java's merged enum) — the automaton walk of
+        PrefixQuery/WildcardQuery/FuzzyQuery/RegexpQuery, expressed as
+        predicates pushed into the one terms scan (parquet min/max stats
+        are the FST index analog). Capped at ``max_expansions`` distinct
+        terms like the reference's BooleanQuery#maxClauseCount
+        discipline: a term occurs at most once per segment, so the first
+        ``max_expansions`` x segments rows in term order hold them all,
+        and they are deduplicated on the driver."""
+        t = _apply_term_patterns(
+            self._all_terms().select("term"), prefix, wildcard, fuzzy, regexp,
+            term_range,
+        )
+        rows = t.orderBy("term").limit(max_expansions * len(self.segments))
+        return list(dict.fromkeys(r["term"] for r in rows.collect()))[
+            :max_expansions
+        ]
+
+    def matchall_topk(
+        self, k: int = 10, fq: str | None = None, boost: float = 1.0
+    ) -> DataFrame:
+        """MatchAllDocsQuery across the catalog: every LIVE doc, constant
+        score = boost, global doc order (docBase + local id); fq composes
+        per segment like every scored path. Shared by the classic-parser
+        `*:*` route and the CLI's local-params and xmlparser branches."""
+
+        def live_docs(s: Segment) -> DataFrame:
+            dm = s.stored_fields(self.spark).select("doc_id")
+            dd = self._deleted_docs(s)
+            if dd is not None:
+                dm = dm.join(dd.select("doc_id"), "doc_id", "left_anti")
+            if fq:
+                dm = dm.join(
+                    self._fq_docs(s, fq).select("doc_id"),
+                    "doc_id",
+                    "left_semi",
+                )
+            return dm.select(
+                "doc_id", F.lit(float(boost)).cast("float").alias("score")
+            )
+
+        # constant score: the merge order reduces to gdoc_id asc
+        return self._merge(live_docs, k)
 
     def search(self, query_string: str, k: int = 10, fq: str | None = None) -> DataFrame:
         """Parse a classic Lucene query string (plans/qparser.py —
-        queryparser/classic/QueryParser.jj analog) and execute it: pure
-        phrases route to the positional matcher, multi-term leaves
-        (wildcard/fuzzy/range) rewrite against the terms dict, phrases
-        inside a Boolean expression become Phrase clauses of the tree
-        (cogrouped postings+positions scorer), everything else runs
-        through the Boolean-tree scorer."""
+        queryparser/classic/QueryParser.jj analog) and execute it: `*:*`
+        takes the live-docs scan, multi-term leaves (wildcard/fuzzy/range)
+        rewrite against the merged terms dict, and everything else —
+        pure phrases included, as a Phrase clause — runs through the
+        Boolean-tree scorer with global stats (bit-identical to a single
+        merged segment)."""
         from ..plans.qparser import _contains_tuple, parse, resolve_multi_terms
+        from .query import Phrase
 
         node = parse(query_string)
         if isinstance(node, tuple) and node[0] == "matchall":
-            # MatchAllDocsQuery (`*:*`, optionally boosted): every doc,
-            # constant score = boost, docID tie-break — a stored-fields
-            # id scan (no norms join, no postings touched)
-            out = self.segment.stored_fields(self.spark).select(
-                "doc_id", F.lit(float(node[1])).cast("float").alias("score")
-            )
-            if fq:
-                out = out.join(
-                    self.fq_docs(fq).select("doc_id"), "doc_id", "left_semi"
-                )
-            return out.orderBy(F.asc("doc_id")).limit(k)
+            return self.matchall_topk(k=k, fq=fq, boost=float(node[1]))
         if isinstance(node, tuple) and node[0] == "phrase":
-            if fq is None:
-                return self._phrase_tuple_topk(node, k)
-            # fq-ed pure phrase: route through the tree scorer (identical
-            # scores; the tree path carries the filter cogroup)
-            from .query import Phrase
-
             node = Phrase(tuple(node[1]), node[2], node[3], node[4])
         else:
             node = resolve_multi_terms(node, self)
             assert not _contains_tuple(node), "unresolved leaf after rewrite"
         return self.topk_query(node, k=k, fq=fq)
-
-    def _phrase_tuple_topk(self, node: tuple, k: int) -> DataFrame:
-        """Standalone phrase fast path — skips the Boolean tree entirely
-        (identical scores: same freq kernel, same float32 formula)."""
-        from .phrase import phrase_topk
-
-        _, terms, slop, boost, field = node
-        if field is not None:
-            raise ValueError(
-                "field-scoped phrase on a single-field Searcher — use "
-                "operators.fields.FieldedSearcher"
-            )
-        hits = phrase_topk(
-            self.spark, self.segment, " ".join(terms), k=k, slop=slop
-        )
-        if boost != 1.0:
-            hits = hits.select(
-                "doc_id",
-                (F.col("score") * F.lit(float(boost))).cast("float").alias("score"),
-            )
-        return hits
 
     def search_synonyms(
         self, query_text: str, rules, k: int = 10, fq: str | None = None
@@ -463,12 +684,50 @@ class Searcher:
         reindexing): the analyzed query rewrites through ``rules``
         (functions/synonyms.py#expand_query_synonyms) into Synonym /
         Phrase / Term leaves, then runs the ordinary Boolean-tree scorer
-        against this PLAIN index."""
-        from ..functions.analysis import tokenize_text
+        against the PLAIN index."""
         from ..functions.synonyms import expand_query_synonyms
 
         node = expand_query_synonyms(tokenize_text(query_text), rules)
         return self.topk_query(node, k=k, fq=fq)
+
+
+class Searcher(MultiSearcher):
+    """One segment served as a one-segment catalog without deletes: every
+    query entry point is MultiSearcher's, and results are (doc_id, score)
+    because a lone segment's gdoc_id is its doc_id. Adds the
+    single-segment extras (explain, similarities, constant-score
+    multi-term queries, DocSets and facets, suggesters)."""
+
+    _SCHEMA = _TOPK_SCHEMA
+
+    def __init__(self, spark: SparkSession, segment: Segment):
+        super().__init__(spark, [segment])
+        self.segment = segment
+        self.stats = segment.stats
+
+    @property
+    def postings(self) -> DataFrame:
+        return self._table(self.segment, "postings")
+
+    @property
+    def terms(self) -> DataFrame:
+        return self._table(self.segment, "terms")
+
+    @property
+    def docmap(self) -> DataFrame:
+        return self._table(self.segment, "docmap")
+
+    def _merge(self, per_segment, k: int) -> DataFrame:
+        # gdoc_id == doc_id: the segment's own frame is the result
+        return (
+            per_segment(self.segment)
+            .orderBy(F.desc("score"), F.asc("doc_id"))
+            .limit(k)
+        )
+
+    def fq_docs(self, fq: str) -> DataFrame:
+        """The cached (bucket, doc_id) set of docs passing ``fq``."""
+        return self._fq_docs(self.segment, fq)
 
     def topk_multi_phrase(self, slots: list, k: int = 10, slop: int = 0) -> DataFrame:
         """MultiPhraseQuery (search/MultiPhraseQuery.java): slot i of the
@@ -485,45 +744,6 @@ class Searcher:
         return hits.join(self.docmap, "doc_id", "left").orderBy(
             F.desc("score"), F.asc("doc_id")
         )
-
-    def topk_after(
-        self,
-        query_text: str,
-        after: tuple[float, int],
-        k: int = 10,
-        mode: str = "wand",
-        op: str = "or",
-        fq: str | None = None,
-    ) -> DataFrame:
-        """searchAfter deep paging (search/IndexSearcher.java#searchAfter,
-        Solr cursorMark): return the k hits strictly after the cursor
-        ``(score, doc_id)`` in (score desc, doc_id asc) order — keyset
-        pagination, no offset scan. The cursor predicate is applied INSIDE
-        the per-bucket scorer before its local top-k, so each bucket emits
-        at most k rows (any doc past the cursor beyond a bucket's best k
-        can never enter the page) — per-page cost stays proportional to k,
-        not corpus size. WAND stays off: its threshold prunes exactly the
-        below-cursor region a page request needs."""
-        after_score, after_doc = float(after[0]), int(after[1])
-        q_terms = sorted(set(tokenize_text(query_text)))
-        stats = self.term_stats(q_terms)
-        matched = sorted(stats)
-        if not matched or (op == "and" and len(matched) < len(q_terms)):
-            return self.spark.createDataFrame([], _TOPK_SCHEMA)
-        idfs = {t: np.float32(stats[t].idf) for t in matched}
-        per_bucket = score_postings(
-            self.postings,
-            idfs,
-            self._cache,
-            k,
-            op,
-            len(q_terms),
-            self.stats.avgdl,
-            use_wand=False,
-            after=(after_score, after_doc),
-            filter_docs=self.fq_docs(fq) if fq else None,
-        )
-        return per_bucket.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
 
     def explain(self, query_text: str, doc_id: int) -> dict:
         """IndexSearcher#explain analog: per-term score breakdown for one
@@ -587,14 +807,14 @@ class Searcher:
         sim.prepare(self.stats.n_docs, self.stats.avgdl)
         q_terms = sorted(set(tokenize_text(query_text)))
         if not q_terms:
-            return self.spark.createDataFrame([], _TOPK_SCHEMA)
+            return self._empty()
         rows = self.terms.filter(F.col("term").isin(q_terms)).collect()
         states = {
             r["term"]: sim.weight(int(r["df"]), int(r["ttf"]), self.stats.sum_ttf)
             for r in rows
         }
         if not states or (op == "and" and len(states) < len(q_terms)):
-            return self.spark.createDataFrame([], _TOPK_SCHEMA)
+            return self._empty()
         n_req = len(q_terms)
 
         def score_bucket(pdf: pd.DataFrame) -> pd.DataFrame:
@@ -608,26 +828,6 @@ class Searcher:
 
     # -- multi-term query rewrites (MultiTermQuery CONSTANT_SCORE_REWRITE) --
 
-    def expand_terms(
-        self,
-        prefix: str | None = None,
-        wildcard: str | None = None,
-        fuzzy: tuple[str, int] | None = None,
-        regexp: str | None = None,
-        term_range: tuple[str | None, str | None] | None = None,
-        max_expansions: int = 1024,
-    ) -> list[str]:
-        """Expand a pattern against the terms dictionary — the automaton
-        walk of PrefixQuery/WildcardQuery/FuzzyQuery/RegexpQuery, expressed
-        as predicates on the sorted terms table (parquet min/max stats are
-        the FST index analog). Capped at ``max_expansions`` terms like
-        the reference's BooleanQuery#maxClauseCount discipline."""
-        t = _apply_term_patterns(
-            self.terms.select("term"), prefix, wildcard, fuzzy, regexp,
-            term_range,
-        )
-        return [r["term"] for r in t.orderBy("term").limit(max_expansions).collect()]
-
     def topk_constant(
         self,
         terms: list[str],
@@ -640,7 +840,7 @@ class Searcher:
         doc scores ``boost``, tie-break doc_id asc -> top-k = first k ids.
         ``deleted``: optional tombstoned doc_id array, excluded (liveDocs)."""
         if not terms:
-            return self.spark.createDataFrame([], _TOPK_SCHEMA)
+            return self._empty()
         from .merge import decode_postings
 
         docs = self.filter_cache.get_or_build(
@@ -1319,346 +1519,6 @@ def _score_bucket_sim(
     if deleted is not None:
         mask &= ~_excluded(base, span, np.asarray(deleted, dtype=np.int64))
     return _local_topk(mask, acc, base, k)
-
-
-class MultiSearcher:
-    """Search across a catalog of segments — the Solr distributed-select
-    analog (SURVEY.md §3.2: QueryComponent#distributedProcess + mergeIds)
-    and Lucene's MultiReader/TopDocs#merge.
-
-    Semantics pinned to Lucene:
-    - corpus stats are GLOBAL: N = sum of segment docCounts, avgdl from the
-      summed totals, df(t) = sum of per-segment df — the ExactStatsCache
-      analog, free here because the terms tables are just unioned+summed.
-    - deleted docs are EXCLUDED from results but still counted in stats
-      until a merge rewrites the segment (liveDocs semantics).
-    - merge tie-break: score desc, then global doc order = (segment order,
-      local doc_id) — Lucene's leaf-ordered docBase + docID.
-
-    Result columns: (segment_id, doc_id, gdoc_id, score) where gdoc_id =
-    segment docBase + local doc_id.
-    """
-
-    def __init__(self, spark: SparkSession, segments: list[Segment], deletes: DataFrame | None = None):
-        assert segments, "empty segment list"
-        self.spark = spark
-        self.segments = segments
-        n_docs = sum(s.stats.n_docs for s in segments)
-        sum_ttf = sum(s.stats.sum_ttf for s in segments)
-        self.n_docs = n_docs
-        self.avgdl = sum_ttf / n_docs if n_docs else 0.0
-        self._cache = bm25.norm_cache(self.avgdl)
-        self.doc_base = {}
-        acc = 0
-        for s in segments:
-            self.doc_base[s.segment_id] = acc
-            acc += s.stats.n_docs
-        # Tombstones stay a DataFrame end-to-end (PendingDeletes analog,
-        # distributed): per-(segment, bucket) slices ride the scorers' one
-        # tagged side channel next to the fq sets (_bucket_plan) — never
-        # collected to the driver, so a 100 TB-scale delete backlog costs
-        # O(1) driver memory. isEmpty() is a limit-1 probe so delete-free
-        # catalogs skip the side channel entirely (the common fast path).
-        self._deletes: DataFrame | None = None
-        if deletes is not None and not deletes.isEmpty():
-            self._deletes = deletes
-        # shards.tolerant bookkeeping (set by from_catalog(tolerant=True))
-        self.skipped: list[tuple[str, str]] = []
-        self.partial_results = False
-        # per-(segment, fq) materialized DocSets (the Searcher FilterCache
-        # analog): repeated filters skip the stored-fields scan per query
-        self.filter_cache = FilterCache()
-
-    def _fq_docs(self, s: Segment, fq: str) -> DataFrame:
-        return self.filter_cache.get_or_build(
-            (s.segment_id, fq), lambda: build_fq_docs(self.spark, s, fq)
-        )
-
-    def _deleted_docs(self, s: Segment) -> DataFrame | None:
-        """This segment's tombstones as a (bucket, doc_id) DataFrame sharing
-        the build-time doc-space bucketing, or None when the catalog has no
-        deletes at all."""
-        if self._deletes is None:
-            return None
-        bd = s.stats.bucket_docs
-        return self._deletes.filter(
-            F.col("segment_id") == s.segment_id
-        ).select(
-            F.floor(F.col("doc_id") / bd).cast("long").alias("bucket"),
-            "doc_id",
-        )
-
-    @classmethod
-    def from_catalog(
-        cls, spark: SparkSession, catalog, tolerant: bool = False
-    ) -> "MultiSearcher":
-        """``tolerant`` is solr's shards.tolerant=true
-        (HttpShardHandler/SearchHandler: a failed shard is skipped and the
-        response carries partialResults=true instead of propagating the
-        error; the default re-raises like shards.tolerant=false). A
-        segment "fails" when a required table's completeness marker is
-        missing — the per-table _SUCCESS marker is this engine's analog
-        of the reference's per-file checksum validation at reader-open
-        (index/SegmentInfos.java read path). Skipped segments are listed
-        on ``.skipped`` (segment_id, reason) and ``.partial_results`` is
-        set — surfaced, not logged."""
-        segs = catalog.segments()
-        if not tolerant:
-            return cls(spark, segs, deletes=catalog.deletes(spark))
-        ok: list[Segment] = []
-        skipped: list[tuple[str, str]] = []
-        for s in segs:
-            reason = cls._validate_segment(s)
-            if reason is None:
-                ok.append(s)
-            else:
-                skipped.append((s.segment_id, reason))
-        if not ok:
-            raise RuntimeError(
-                "shards.tolerant: every segment failed validation: "
-                + "; ".join(f"{sid}: {r}" for sid, r in skipped)
-            )
-        ms = cls(spark, ok, deletes=catalog.deletes(spark))
-        ms.skipped = skipped
-        ms.partial_results = bool(skipped)
-        return ms
-
-    @staticmethod
-    def _validate_segment(s: Segment) -> str | None:
-        """None when servable; else the skip reason. In-memory (NRT)
-        segments are live by construction."""
-        for t in ("terms", "postings", "docmap"):
-            if not s.has_table(t):
-                return f"missing table {t!r}"
-        return None
-
-    def _all_terms(self) -> DataFrame:
-        """Every segment's terms dict as ONE scan: all on-disk segments go
-        through a single multi-path parquet read (one FileScan node — plan
-        size constant in segment count, the index/MultiTermsEnum.java merged
-        enum), with only in-memory (NRT, unflushed) segments unioned on top.
-        At a thousand segments this keeps plan compilation O(1) instead of
-        O(segments) union nodes."""
-        disk_paths = []
-        mem_parts = []
-        for s in self.segments:
-            if "terms" in s.dfs or not s.path:
-                mem_parts.append(
-                    s.table(self.spark, "terms").select("term", "df")
-                )
-            else:
-                disk_paths.append(os.path.join(s.path, "terms"))
-        parts = []
-        if disk_paths:
-            parts.append(
-                self.spark.read.parquet(*disk_paths).select("term", "df")
-            )
-        parts.extend(mem_parts)
-        u = parts[0]
-        for p in parts[1:]:
-            u = u.unionByName(p)
-        return u
-
-    def attach_bloom(self, bloom=None, fp: float = 0.01):
-        """Catalog-level terms bloom (functions/bloom.py): one filter over
-        the UNION of the segments' terms; all-absent queries then skip the
-        scatter-gather stats pre-pass and every per-segment job."""
-        if bloom is None:
-            from ..functions.bloom import TermBloom
-
-            class _U:  # duck-typed segment view over the merged terms dict
-                stats = type("S", (), {"n_terms": 0})()
-
-                def table(_self, spark, name):
-                    assert name == "terms"
-                    return self._all_terms()
-
-            bloom = TermBloom.build(self.spark, _U(), fp=fp)
-        self.bloom = bloom
-        return bloom
-
-    def term_stats(self, terms: list[str]) -> dict[str, TermStats]:
-        """Global df per query term: one grouped read over the merged terms
-        dict, summed — a tiny scatter-gather pre-pass (phase 0)."""
-        if not terms:
-            return {}
-        bloom = getattr(self, "bloom", None)
-        if bloom is not None:
-            terms = [t for t in terms if bloom.might_contain(t)]
-            if not terms:  # no false negatives -> absent in EVERY segment
-                return {}
-        u = self._all_terms().filter(F.col("term").isin(terms))
-        out = {}
-        for r in u.groupBy("term").agg(F.sum("df").alias("df")).collect():
-            out[r["term"]] = TermStats(
-                term=r["term"], df=int(r["df"]), idf=bm25.idf(self.n_docs, int(r["df"]))
-            )
-        return out
-
-    def topk(
-        self,
-        query_text: str,
-        k: int = 10,
-        mode: str = "wand",
-        op: str = "or",
-        fq: str | None = None,
-    ) -> DataFrame:
-        q_terms = sorted(set(tokenize_text(query_text)))
-        stats = self.term_stats(q_terms)
-        matched = sorted(stats)
-        if not matched or (op == "and" and len(matched) < len(q_terms)):
-            return self.spark.createDataFrame([], _MULTI_SCHEMA)
-        idfs = {t: np.float32(stats[t].idf) for t in matched}
-        use_wand = mode == "wand"  # "and" routes to the BlockMaxConjunction branch
-        return self._merge(
-            lambda s: score_postings(
-                s.table(self.spark, "postings"),
-                idfs,
-                self._cache,
-                k,
-                op,
-                len(q_terms),
-                self.avgdl,
-                use_wand,
-                deleted_docs=self._deleted_docs(s),
-                filter_docs=self._fq_docs(s, fq) if fq else None,
-            ),
-            k,
-        )
-
-    def topk_query(self, q, k: int = 10, fq: str | None = None) -> DataFrame:
-        """Boolean-tree (and Phrase-clause) search across the catalog —
-        the distributed IndexSearcher#search(BooleanQuery) analog. Global
-        stats (summed df / N / avgdl) feed EVERY segment's leaf scorer, so
-        scores are identical to a single merged index (ExactStatsCache);
-        per-segment liveDocs excluded; merge tie-break (score desc,
-        gdoc_id asc) as in topk."""
-        from .query import collect_fields, collect_phrases, collect_terms, rewrite
-
-        if collect_fields(q) - {None}:
-            # same guard as Searcher: a field-scoped leaf would silently
-            # score against the single indexed text field (wrong field,
-            # wrong results) — refuse like FieldedSearcher expects
-            raise ValueError(
-                "field-scoped query on a single-field MultiSearcher — "
-                "use operators.fields.FieldedSearcher"
-            )
-        q = rewrite(q)
-        phrases = collect_phrases(q)
-        stats = self.term_stats(sorted(collect_terms(q)))
-        if not stats:
-            return self.spark.createDataFrame([], _MULTI_SCHEMA)
-        # GLOBAL dfs and N — identical to a merged index
-        idfs, syn_idfs, phrase_idfs = _tree_idfs(q, stats, self.n_docs)
-        if phrases:
-            assert all(s.has_table("positions") for s in self.segments), (
-                "phrase clauses need positional indexes in every segment"
-            )
-        return self._merge(
-            lambda s: score_query_postings(
-                s.table(self.spark, "postings"),
-                q,
-                idfs,
-                self._cache,
-                k,
-                deleted_docs=self._deleted_docs(s),
-                positions=(
-                    s.table(self.spark, "positions") if phrase_idfs else None
-                ),
-                phrase_idfs=phrase_idfs,
-                filter_docs=self._fq_docs(s, fq) if fq else None,
-                syn_idfs=syn_idfs,
-            ),
-            k,
-        )
-
-    def _merge(self, per_segment, k: int) -> DataFrame:
-        """Global merge (TopDocs#merge): each segment's (doc_id, score)
-        frame ``per_segment(s)`` gains segment_id and gdoc_id = docBase +
-        doc_id; the union is ordered by (score desc, gdoc_id asc) and
-        limited to k."""
-        parts = [
-            per_segment(s).select(
-                F.lit(s.segment_id).alias("segment_id"),
-                "doc_id",
-                (F.col("doc_id") + F.lit(self.doc_base[s.segment_id])).alias(
-                    "gdoc_id"
-                ),
-                "score",
-            )
-            for s in self.segments
-        ]
-        u = parts[0]
-        for p in parts[1:]:
-            u = u.unionByName(p)
-        return u.orderBy(F.desc("score"), F.asc("gdoc_id")).limit(k)
-
-    def expand_terms(
-        self,
-        prefix: str | None = None,
-        wildcard: str | None = None,
-        fuzzy: tuple[str, int] | None = None,
-        regexp: str | None = None,
-        term_range: tuple[str | None, str | None] | None = None,
-        max_expansions: int = 1024,
-    ) -> list[str]:
-        """Multi-segment MultiTermQuery rewrite: the same automaton-walk
-        predicates as Searcher.expand_terms, over the UNION of every
-        segment's terms dictionary (index/MultiTermsEnum.java's merged
-        enum). Predicates push into the single multi-path scan; the
-        ``max_expansions`` cap applies to the merged, distinct result."""
-        u = self._all_terms().select("term")
-        u = _apply_term_patterns(
-            u, prefix, wildcard, fuzzy, regexp, term_range
-        ).distinct()
-        return [
-            r["term"] for r in u.orderBy("term").limit(max_expansions).collect()
-        ]
-
-    def matchall_topk(
-        self, k: int = 10, fq: str | None = None, boost: float = 1.0
-    ) -> DataFrame:
-        """MatchAllDocsQuery across the catalog: every LIVE doc, constant
-        score = boost, global doc order (docBase + local id); fq composes
-        per segment like every scored path. Shared by the classic-parser
-        `*:*` route and the CLI's local-params branch."""
-
-        def live_docs(s: Segment) -> DataFrame:
-            dm = s.stored_fields(self.spark).select("doc_id")
-            dd = self._deleted_docs(s)
-            if dd is not None:
-                dm = dm.join(dd.select("doc_id"), "doc_id", "left_anti")
-            if fq:
-                dm = dm.join(
-                    self._fq_docs(s, fq).select("doc_id"),
-                    "doc_id",
-                    "left_semi",
-                )
-            return dm.select(
-                "doc_id", F.lit(float(boost)).cast("float").alias("score")
-            )
-
-        # constant score: the merge order reduces to gdoc_id asc
-        return self._merge(live_docs, k)
-
-    def search(self, query_string: str, k: int = 10, fq: str | None = None) -> DataFrame:
-        """Classic query string against the whole catalog — mirrors
-        Searcher.search: multi-term leaves rewrite against the merged
-        terms dict, pure phrases become a Phrase clause of the tree
-        (MultiSearcher.topk_query scores Phrase leaves with global stats,
-        bit-identical to a single merged segment)."""
-        from ..plans.qparser import _contains_tuple, parse, resolve_multi_terms
-        from .query import Phrase
-
-        node = parse(query_string)
-        if isinstance(node, tuple) and node[0] == "matchall":
-            return self.matchall_topk(k=k, fq=fq, boost=float(node[1]))
-        if isinstance(node, tuple) and node[0] == "phrase":
-            node = Phrase(tuple(node[1]), node[2], node[3], node[4])
-        else:
-            node = resolve_multi_terms(node, self)
-            assert not _contains_tuple(node), "unresolved leaf after rewrite"
-        return self.topk_query(node, k=k, fq=fq)
 
 
 def exhaustive_scores(searcher: Searcher, query_text: str, op: str = "or") -> DataFrame:

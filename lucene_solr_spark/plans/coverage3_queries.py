@@ -1228,7 +1228,7 @@ def bm25_engine_search_after(spark, sf_dir):
     s = _engine_searcher(spark, sf_dir)
     page1 = s.topk("order batch stream", k=10, mode="wand").collect()
     cursor = (float(page1[-1].score), int(page1[-1].doc_id))
-    res = s.topk_after("order batch stream", after=cursor, k=10, mode="wand")
+    res = s.topk("order batch stream", k=10, mode="wand", after=cursor)
     return res.select(
         "doc_id", F.round(F.col("score").cast("double"), 4).alias("score")
     )

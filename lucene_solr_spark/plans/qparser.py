@@ -297,8 +297,8 @@ def resolve_multi_terms(node, searcher, max_expansions: int = 1024):
             # rendering here (the constant-score clause would need its
             # own scorer slot); top-level forms — bare, boosted, or
             # parenthesized — are intercepted by the callers
-            # (Searcher/MultiSearcher.search, the CLI branches) before
-            # this rewrite, so only genuinely nested shapes reach here
+            # (MultiSearcher.search, the CLI branches) before this
+            # rewrite, so only genuinely nested shapes reach here
             raise QueryParseError(
                 "*:* inside a Boolean expression is not supported; "
                 "use it as the entire query"

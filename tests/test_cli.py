@@ -450,17 +450,28 @@ def test_cli_multi_segment_overlapping_ids_refused(spark, tmp_path, capsys):
         assert "overlap" in capsys.readouterr().err
 
 
-def test_cli_surround_excludes_deletes(spark, cli_index, tmp_path, capsys):
-    """liveDocs: a tombstoned doc must vanish from surround results exactly
-    as it does on the classic (MultiSearcher) path."""
+@pytest.mark.parametrize(
+    "argv",
+    [
+        ["--query", "W(key, order)", "--deftype", "surround"],
+        ["--query", "spark", "--synonyms", "{syn}"],
+    ],
+    ids=["surround", "synonyms"],
+)
+def test_cli_surround_excludes_deletes(spark, cli_index, tmp_path, capsys, argv):
+    """liveDocs: a tombstoned doc must vanish from surround and query-time
+    synonym results exactly as it does on the classic (MultiSearcher)
+    path."""
     import shutil as _sh
 
     from lucene_solr_spark.sources.catalog import Catalog
 
+    syn = tmp_path / "syn.txt"
+    syn.write_text("spark, big data\n")
+    argv = [a.replace("{syn}", str(syn)) for a in argv]
     idx = str(tmp_path / "srd_del")
     _sh.copytree(cli_index, idx)
-    rc = main(["search", "--index", idx, "--query", "W(key, order)",
-               "--deftype", "surround", "--k", "5"])
+    rc = main(["search", "--index", idx, *argv, "--k", "5"])
     assert rc == 0
     before = [r["doc_id"] for r in _lines(capsys)]
     assert before
@@ -472,12 +483,54 @@ def test_cli_surround_excludes_deletes(spark, cli_index, tmp_path, capsys):
             [(seg_id, victim)], "segment_id string, doc_id long"
         )
     )
-    rc = main(["search", "--index", idx, "--query", "W(key, order)",
-               "--deftype", "surround", "--k", "5"])
+    rc = main(["search", "--index", idx, *argv, "--k", "5"])
     assert rc == 0
     after = [r["doc_id"] for r in _lines(capsys)]
     assert victim not in after
     assert after == [d for d in before if d != victim][: len(after)] or after
+
+
+def test_cli_synonyms_multi_segment(spark, cli_index, tmp_path, capsys):
+    """--synonyms serves a two-segment catalog with a tombstone: global
+    stats, liveDocs excluded, ids in the global doc space — the same hits
+    as MultiSearcher.topk_query over the expanded query."""
+    from lucene_solr_spark.functions.analysis import tokenize_text
+    from lucene_solr_spark.functions.synonyms import (
+        expand_query_synonyms,
+        parse_synonym_rules,
+    )
+    from lucene_solr_spark.sources.catalog import Catalog
+
+    two = str(tmp_path / "two_seg_syn")
+    shutil.copytree(cli_index, two)
+    cat = Catalog(two)
+    seg = build_index(
+        spark, documents_as_corpus(spark, SF).filter("doc_id < 100"),
+        out_dir=two, segment_id="syn1", with_positions=True,
+    )
+    cat.commit_swap(add=[seg.segment_id])
+    assert len(cat.segments()) == 2
+    rules_text = "spark, big data\n"
+    syn = tmp_path / "syn.txt"
+    syn.write_text(rules_text)
+    node = expand_query_synonyms(
+        tokenize_text("spark"), parse_synonym_rules(rules_text.splitlines())
+    )
+    top = MultiSearcher.from_catalog(spark, cat).topk_query(node, k=1).first()
+    cat.add_deletes(spark.createDataFrame(
+        [(top["segment_id"], top["doc_id"])], "segment_id string, doc_id long"
+    ))
+    rc = main(["search", "--index", two, "--query", "spark",
+               "--synonyms", str(syn), "--k", "5"])
+    assert rc == 0
+    got = [(r["doc_id"], round(r["score"], 5)) for r in _lines(capsys)]
+    want = [
+        (int(r["gdoc_id"]), round(float(r["score"]), 5))
+        for r in MultiSearcher.from_catalog(spark, cat)
+        .topk_query(node, k=5).collect()
+    ]
+    assert got == want and got
+    assert int(top["gdoc_id"]) not in [d for d, _ in got]
 
 
 def test_cli_xmlparser_match_all_honours_fq(spark, cli_index, capsys):

@@ -226,3 +226,12 @@ def test_fuzzy_transpositions_osa(spark):
     assert s.expand_terms(fuzzy=("mrege", 1)) == []
     assert s.expand_terms(fuzzy=("mrege", 1, True)) == ["merge"]
     assert sorted(s.expand_terms(fuzzy=("marge", 1, True))) == ["marge", "merge"]
+
+
+def test_multisearcher_refuses_empty_segment_list(spark):
+    """A typed refusal, not a bare assert that ``python -O`` strips."""
+    from lucene_solr_spark.operators.search import MultiSearcher
+
+    with pytest.raises(ValueError, match="at least one segment"):
+        MultiSearcher(spark, [])
+
