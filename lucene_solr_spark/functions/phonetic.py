@@ -258,9 +258,9 @@ def caverphone2_sql(col: str) -> str:
 #     hypothesis-random words. First char is emitted verbatim
 #     (protected as uppercase through the lowercase-context rules).
 #
-# Documented bound: consonant-fed H/W runs longer than the 4 chain
-# iterations (e.g. 'bhhhhh') may deviate from the scan; no [a-z]+ corpus
-# term comes near it and the parity test screens random inputs.
+# Documented bound: H/W runs longer than the 4 chain iterations (e.g.
+# 'bhhhhh', 'ahwwwww') may deviate from the scan; no [a-z]+ corpus term
+# comes near it and the parity test screens random inputs.
 # ---------------------------------------------------------------------------
 
 _NY_VOWELS = "aeiou"
@@ -282,8 +282,14 @@ NYSIIS_LAST: list[tuple[str, str]] = [
 
 def _nysiis_stage2() -> list[tuple[str, str]]:
     """Tail transcode + dedup + trailing trims, first char protected."""
+    # An H after a W copies it only once that W is settled: a W after an
+    # unresolved H may still turn into a vowel, and an H between two
+    # vowels is kept ('ahwha' -> AH). A copied W next to a consonant or
+    # the end heals itself through the W rule below.
     hw_block = [
-        (f"({_NY_NV_CLASS})h", "<1><1>"),
+        ("([^aAEIOUw])h", "<1><1>"),
+        (f"(w)h({_NY_NV_CLASS}|$)", "<1><1><2>"),
+        ("([^aAEIOUhw]w+)h", "<1>w"),
         (f"({_NY_V_CLASS})h({_NY_NV_CLASS})", "<1><1><2>"),
         (f"({_NY_V_CLASS})h$", "<1><1>"),
         (f"({_NY_V_CLASS})w", "<1><1>"),
