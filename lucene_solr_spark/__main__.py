@@ -106,25 +106,37 @@ def _disjoint_doc_ids(spark, segments) -> bool:
 def _fetch_stored(spark, segs_by_id, wanted, fl):
     """RealTimeGet-style stored-fields point fetch for the <=k result
     docs (solr RealTimeGetComponent / the 'fl' field list over the
-    stored-fields store): one isin-pruned docmap scan per segment;
-    driver-side rows bounded by --k. ``wanted`` maps segment_id ->
-    {local doc_id: printed doc_id}; unknown fl names are ignored, as in
-    the reference."""
+    stored-fields store): each segment's isin-pruned stored-fields scan,
+    unioned into ONE job; driver-side rows bounded by --k. The raw stored
+    fields are read (opened once per Segment), the norms-joined docmap
+    view only when ``fl`` names a norms column. ``wanted`` maps
+    segment_id -> {local doc_id: printed doc_id}; unknown fl names are
+    ignored, as in the reference."""
     from pyspark.sql import functions as F
 
-    out: dict[int, dict] = {}
+    from .operators.search import union_all
+
+    parts, cols_of = [], {}
     for sid, w in wanted.items():
         seg = segs_by_id.get(sid)
         if seg is None or not w:
             continue
-        dm = seg.table(spark, "docmap").filter(
-            F.col("doc_id").isin([int(x) for x in w])
-        )
+        if {"dl", "norm_byte"} & set(fl):
+            dm = seg.table(spark, "docmap")
+        else:
+            dm = seg.stored_fields(spark)
         cols = [c for c in fl if c in dm.columns]
-        if not cols:
-            continue
-        for r in dm.select("doc_id", *cols).collect():
-            out[w[int(r["doc_id"])]] = {c: r[c] for c in cols}
+        if cols:
+            cols_of[sid] = cols
+            parts.append(
+                dm.filter(F.col("doc_id").isin([int(x) for x in w])).select(
+                    F.lit(sid).alias("segment_id"), "doc_id", *cols
+                )
+            )
+    out: dict[int, dict] = {}
+    for r in union_all(parts).collect() if parts else []:
+        sid = r["segment_id"]
+        out[wanted[sid][int(r["doc_id"])]] = {c: r[c] for c in cols_of[sid]}
     return out
 
 
@@ -351,6 +363,7 @@ def _search(args) -> int:
             print(json.dumps({"error": f"query parse: {exc}"}),
                   file=sys.stderr)
             return 2
+        printed = "gdoc_id"
     rows = hits.collect()
     extra: dict[int, dict] = {}
     fl = [c.strip() for c in (getattr(args, "fl", None) or "").split(",")
@@ -361,9 +374,8 @@ def _search(args) -> int:
         wanted: dict[str, dict[int, int]] = {}
         if "segment_id" in cols:
             # unambiguous (segment, local id) pairs straight from the hit;
-            # the fetch is keyed by the SAME pair, not the printed id —
-            # on the classic multi-segment path two segments can print
-            # equal local doc_ids and must not swap stored fields
+            # the fetch is keyed by the SAME pair: two segments can share
+            # local doc_ids and must not swap stored fields
             row_key = lambda r: (r["segment_id"], int(r["doc_id"]))  # noqa: E731
             for r in rows:
                 wanted.setdefault(r["segment_id"], {})[int(r["doc_id"])] = (

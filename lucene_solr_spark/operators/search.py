@@ -17,13 +17,17 @@ Spark restatement:
   * postings scan: ``postings.filter(term.isin(...))`` — the postings table
     is range-partitioned + sorted by term, so parquet row-group min/max stats
     prune everything else (the FST terms-index analog).
-  * per-leaf scoring: applyInPandas grouped by ``bucket`` (the doc-space
-    bucket fixed at build time — every term's blocks are aligned to it, so a
-    bucket is a self-contained "leaf"). Inside: numpy decode + float32 BM25,
+  * per-leaf scoring: ONE applyInPandas over every segment, grouped by
+    (``bucket``, ``seg``): the segments' postings are unioned, each row
+    tagged with its segment ordinal ``seg``, and a (doc-space bucket fixed
+    at build time, segment) pair is a self-contained "leaf" — every term's
+    blocks are aligned to the bucket. Inside: numpy decode + float32 BM25,
     optionally with block-max pruning (WAND analog — see ``_score_bucket``).
-  * merge: per-bucket top-k -> global ``orderBy(score desc, gdoc_id asc)
-    .limit(k)`` over the segments (gdoc_id = docBase + doc_id) —
-    TopDocs#merge with the pinned tie-break.
+    A query runs one scoring stage however many segments the catalog has.
+  * merge: per-leaf top-k (seg, doc_id, score) -> ``seg`` mapped to
+    segment_id and docBase, then ONE global ``orderBy(score desc, gdoc_id
+    asc).limit(k)`` (gdoc_id = docBase + doc_id) — TopDocs#merge with the
+    pinned tie-break.
   * late materialization: display fields joined from ``docmap`` only AFTER
     the limit (QueryComponent#distributedProcess two-phase retrieval analog).
 
@@ -38,10 +42,11 @@ from __future__ import annotations
 import math
 import os
 from dataclasses import dataclass
+from functools import reduce
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.analysis import tokenize_text
@@ -63,6 +68,21 @@ def _empty_topk() -> pd.DataFrame:
     return pd.DataFrame(
         {"doc_id": np.array([], dtype=np.int64),
          "score": np.array([], dtype=np.float32)}
+    )
+
+
+def union_all(frames: list[DataFrame]) -> DataFrame:
+    """One frame from several, by column name; a column some frames lack
+    is null in their rows."""
+    return reduce(lambda a, b: a.unionByName(b, allowMissingColumns=True), frames)
+
+
+def _lit_map(values: dict, key: str) -> Column:
+    """``values[x]`` for the value x of column ``key``, as a literal map:
+    no join, one expression."""
+    return F.element_at(
+        F.create_map(*(F.lit(x) for kv in values.items() for x in kv)),
+        F.col(key),
     )
 
 
@@ -115,17 +135,7 @@ def _apply_term_patterns(t, prefix, wildcard, fuzzy, regexp, term_range):
     if prefix is not None:
         t = t.filter(F.col("term").startswith(prefix))
     if wildcard is not None:
-        # WildcardQuery (search/WildcardQuery.java): only '*' and '?' are
-        # wildcards — literal '%'/'_' in a term must stay literal, so
-        # escape them before translating to SQL LIKE (default escape '\')
-        pat = (
-            wildcard.replace("\\", "\\\\")
-            .replace("%", r"\%")
-            .replace("_", r"\_")
-            .replace("*", "%")
-            .replace("?", "_")
-        )
-        t = t.filter(F.col("term").like(pat))
+        t = t.filter(F.col("term").like(_wildcard_like(wildcard)))
     if fuzzy is not None:
         # FuzzyQuery (search/FuzzyQuery.java): Lucene's metric is OSA
         # (Damerau with transpositions, the LevenshteinAutomata default,
@@ -160,6 +170,23 @@ def _apply_term_patterns(t, prefix, wildcard, fuzzy, regexp, term_range):
         if hi is not None:
             t = t.filter(F.col("term") < hi)
     return t
+
+
+def _wildcard_like(wildcard: str) -> str:
+    """WildcardQuery pattern -> SQL LIKE pattern (escape '\\'). As in
+    search/WildcardQuery.java#toAutomaton, only '*' and '?' are wildcards,
+    a backslash makes the next character literal (``\\*`` matches a '*'),
+    and a trailing lone backslash is itself literal; literal '%', '_' and
+    '\\' are escaped for LIKE."""
+    out, chars = [], iter(wildcard)
+    for c in chars:
+        if c in "*?":
+            out.append("%" if c == "*" else "_")
+            continue
+        if c == "\\":
+            c = next(chars, "\\")
+        out.append("\\" + c if c in "\\%_" else c)
+    return "".join(out)
 
 
 class FilterCache:
@@ -270,8 +297,8 @@ class MultiSearcher:
             self.doc_base[s.segment_id] = acc
             acc += s.stats.n_docs
         # Tombstones stay a DataFrame end-to-end (PendingDeletes analog,
-        # distributed): per-(segment, bucket) slices ride the scorers' one
-        # tagged side channel next to the fq sets (_bucket_plan) — never
+        # distributed): (bucket, seg) slices ride the scorers' one tagged
+        # side channel next to the fq sets (_bucket_plan) — never
         # collected to the driver, so a 100 TB-scale delete backlog costs
         # O(1) driver memory. isEmpty() is a limit-1 probe so delete-free
         # catalogs skip the side channel entirely (the common fast path).
@@ -287,7 +314,7 @@ class MultiSearcher:
         self.result_cache: QueryResultCache | None = None
         self.bloom = None
         # tables opened on first use, then reused by every query
-        self._opened: dict[tuple[str, str], DataFrame] = {}
+        self._opened: dict[tuple[str | None, str], DataFrame] = {}
         self._terms_union: DataFrame | None = None
 
     def _table(self, s: Segment, name: str) -> DataFrame:
@@ -308,16 +335,39 @@ class MultiSearcher:
             (s.segment_id, fq), lambda: build_fq_docs(self.spark, s, fq)
         )
 
-    def _deleted_docs(self, s: Segment) -> DataFrame | None:
-        """This segment's tombstones as a (bucket, doc_id) DataFrame sharing
-        the build-time doc-space bucketing, or None when the catalog has no
-        deletes at all."""
+    def _each_segment(self, frame) -> DataFrame:
+        """``frame(s)`` of every segment as one frame, each row tagged with
+        its segment ordinal ``seg`` (the N-leaf reader of one plan)."""
+        return union_all([
+            frame(s).withColumn("seg", F.lit(i))
+            for i, s in enumerate(self.segments)
+        ])
+
+    def _segs_table(self, name: str) -> DataFrame:
+        """Every segment's table ``name``, tagged with ``seg``, opened once."""
+        key = (None, name)
+        if key not in self._opened:
+            self._opened[key] = self._each_segment(lambda s: self._table(s, name))
+        return self._opened[key]
+
+    def _fq_sets(self, fq: str) -> DataFrame:
+        """(bucket, doc_id, seg) of every segment's docs passing ``fq``,
+        each segment's set from the FilterCache."""
+        return self._each_segment(lambda s: self._fq_docs(s, fq))
+
+    def _tombstones(self) -> DataFrame | None:
+        """The catalog's tombstones as (seg, bucket, doc_id), sharing each
+        segment's build-time doc-space bucketing — the one (segment_id,
+        doc_id) frame mapped through literal maps, no join — or None when
+        the catalog has no deletes at all."""
         if self._deletes is None:
             return None
-        bd = s.stats.bucket_docs
-        return self._deletes.filter(
-            F.col("segment_id") == s.segment_id
-        ).select(
+        ids = [s.segment_id for s in self.segments]
+        bd = _lit_map({s.segment_id: s.stats.bucket_docs for s in self.segments},
+                      "segment_id")
+        return self._deletes.filter(F.col("segment_id").isin(ids)).select(
+            _lit_map({sid: i for i, sid in enumerate(ids)}, "segment_id")
+            .alias("seg"),
             F.floor(F.col("doc_id") / bd).cast("long").alias("bucket"),
             "doc_id",
         )
@@ -385,10 +435,7 @@ class MultiSearcher:
                 self._table(s, "terms")
                 for s, d in zip(self.segments, on_disk) if not (scan and d)
             ]
-            u = parts[0].select("term", "df")
-            for p in parts[1:]:
-                u = u.unionByName(p.select("term", "df"))
-            self._terms_union = u
+            self._terms_union = union_all([p.select("term", "df") for p in parts])
         return self._terms_union
 
     def attach_bloom(self, bloom=None, fp: float = 0.01):
@@ -505,8 +552,8 @@ class MultiSearcher:
         # "and" routes to the BlockMaxConjunction branch
         use_wand = mode == "wand" and after is None
         return self._merge(
-            lambda s: score_postings(
-                self._table(s, "postings"),
+            score_postings(
+                self._segs_table("postings"),
                 idfs,
                 self._cache,
                 k,
@@ -515,10 +562,12 @@ class MultiSearcher:
                 self.avgdl,
                 use_wand,
                 after=None if after is None else (
-                    float(after[0]), int(after[1]) - self.doc_base[s.segment_id]
+                    float(after[0]),
+                    tuple(int(after[1]) - self.doc_base[s.segment_id]
+                          for s in self.segments),
                 ),
-                deleted_docs=self._deleted_docs(s),
-                filter_docs=self._fq_docs(s, fq) if fq else None,
+                deleted_docs=self._tombstones(),
+                filter_docs=self._fq_sets(fq) if fq else None,
             ),
             k,
         )
@@ -563,43 +612,37 @@ class MultiSearcher:
                 "(build_index(with_positions=True))"
             )
         return self._merge(
-            lambda s: score_query_postings(
-                self._table(s, "postings"),
+            score_query_postings(
+                self._segs_table("postings"),
                 q,
                 idfs,
                 self._cache,
                 k,
-                deleted_docs=self._deleted_docs(s),
+                deleted_docs=self._tombstones(),
                 positions=(
-                    self._table(s, "positions") if phrase_idfs else None
+                    self._segs_table("positions") if phrase_idfs else None
                 ),
                 phrase_idfs=phrase_idfs,
-                filter_docs=self._fq_docs(s, fq) if fq else None,
+                filter_docs=self._fq_sets(fq) if fq else None,
                 syn_idfs=syn_idfs,
             ),
             k,
         )
 
-    def _merge(self, per_segment, k: int) -> DataFrame:
-        """Global merge (TopDocs#merge): each segment's (doc_id, score)
-        frame ``per_segment(s)`` gains segment_id and gdoc_id = docBase +
-        doc_id; the union is ordered by (score desc, gdoc_id asc) and
-        limited to k."""
-        parts = [
-            per_segment(s).select(
-                F.lit(s.segment_id).alias("segment_id"),
-                "doc_id",
-                (F.col("doc_id") + F.lit(self.doc_base[s.segment_id])).alias(
-                    "gdoc_id"
-                ),
-                "score",
-            )
-            for s in self.segments
-        ]
-        u = parts[0]
-        for p in parts[1:]:
-            u = u.unionByName(p)
-        return u.orderBy(F.desc("score"), F.asc("gdoc_id")).limit(k)
+    def _merge(self, hits: DataFrame, k: int) -> DataFrame:
+        """Global merge (TopDocs#merge) of one plan's per-leaf (seg,
+        doc_id, score) rows: ``seg`` maps to segment_id and to docBase
+        (gdoc_id = docBase + doc_id) through literal maps, and the rows are
+        ordered by (score desc, gdoc_id asc) and limited to k."""
+        ids = [s.segment_id for s in self.segments]
+        return hits.select(
+            _lit_map(dict(enumerate(ids)), "seg").alias("segment_id"),
+            "doc_id",
+            (F.col("doc_id") + _lit_map(
+                {i: self.doc_base[sid] for i, sid in enumerate(ids)}, "seg"
+            )).alias("gdoc_id"),
+            "score",
+        ).orderBy(F.desc("score"), F.asc("gdoc_id")).limit(k)
 
     def expand_terms(
         self,
@@ -633,27 +676,35 @@ class MultiSearcher:
         self, k: int = 10, fq: str | None = None, boost: float = 1.0
     ) -> DataFrame:
         """MatchAllDocsQuery across the catalog: every LIVE doc, constant
-        score = boost, global doc order (docBase + local id); fq composes
-        per segment like every scored path. Shared by the classic-parser
-        `*:*` route and the CLI's local-params and xmlparser branches."""
-
-        def live_docs(s: Segment) -> DataFrame:
-            dm = s.stored_fields(self.spark).select("doc_id")
-            dd = self._deleted_docs(s)
-            if dd is not None:
-                dm = dm.join(dd.select("doc_id"), "doc_id", "left_anti")
-            if fq:
-                dm = dm.join(
-                    self._fq_docs(s, fq).select("doc_id"),
-                    "doc_id",
-                    "left_semi",
-                )
-            return dm.select(
-                "doc_id", F.lit(float(boost)).cast("float").alias("score")
+        score = boost, global doc order (docBase + local id). One plan over
+        every segment: the stored-fields doc ids (each segment's opened
+        once, Segment.stored_fields), tagged with ``seg``, go through ONE
+        join that drops the tombstones and, with an fq, ONE join with the
+        segments' cached fq sets. Shared by the classic-parser `*:*` route
+        and the CLI's local-params and xmlparser branches."""
+        live = self._each_segment(
+            lambda s: s.stored_fields(self.spark).select("doc_id")
+        )
+        # outer join + null filter and an inner join (a doc is in an fq
+        # set once), not left_anti / left_semi: Spark pushes semi and anti
+        # joins below the union, one join and one broadcast per segment
+        dead = self._tombstones()
+        if dead is not None:
+            live = live.join(
+                dead.select("seg", "doc_id", F.lit(True).alias("dead")),
+                ["seg", "doc_id"], "left",
+            ).filter(F.col("dead").isNull())
+        if fq:
+            live = live.join(
+                self._fq_sets(fq).select("seg", "doc_id"), ["seg", "doc_id"]
             )
-
         # constant score: the merge order reduces to gdoc_id asc
-        return self._merge(live_docs, k)
+        return self._merge(
+            live.select(
+                "seg", "doc_id", F.lit(float(boost)).cast("float").alias("score")
+            ),
+            k,
+        )
 
     def search(self, query_string: str, k: int = 10, fq: str | None = None) -> DataFrame:
         """Parse a classic Lucene query string (plans/qparser.py —
@@ -717,10 +768,10 @@ class Searcher(MultiSearcher):
     def docmap(self) -> DataFrame:
         return self._table(self.segment, "docmap")
 
-    def _merge(self, per_segment, k: int) -> DataFrame:
-        # gdoc_id == doc_id: the segment's own frame is the result
+    def _merge(self, hits: DataFrame, k: int) -> DataFrame:
+        # gdoc_id == doc_id: the one segment's (doc_id, score) is the result
         return (
-            per_segment(self.segment)
+            hits.select("doc_id", "score")
             .orderBy(F.desc("score"), F.asc("doc_id"))
             .limit(k)
         )
@@ -1023,33 +1074,46 @@ def _bucket_plan(
     deleted_docs: DataFrame | None,
     positions: DataFrame | None = None,
 ) -> DataFrame:
-    """The one per-bucket plan under both scoring entry points.
-    ``leaf(left, right)`` scores one doc-space bucket: ``left`` holds its
-    postings rows, ``right`` its side-channel rows, each tagged in one
-    ``tag`` column as a position row (_POS), a doc passing the fq (_FQ)
-    or a tombstone (_DEL). With no side channel the plan is a plain
-    groupBy and the leaf gets an empty ``right``; otherwise it is ONE
-    cogroup on ``bucket`` — both sides share the build-time bucketing, so
-    no shuffle join appears and neither the fq set nor the delete backlog
-    ever reaches the driver."""
+    """The one per-leaf plan under both scoring entry points. A leaf is
+    one segment's doc-space bucket: rows tagged with a segment ordinal
+    ``seg`` (MultiSearcher's union of every segment) group on (bucket,
+    seg), one table's rows on bucket, and the side-channel frames carry
+    the same keys. ``leaf(seg, left, right)`` returns a leaf's local top-k
+    (doc_id, score) from its postings rows ``left`` and side-channel rows
+    ``right``, each tagged in one ``tag`` column as a position row (_POS),
+    a doc passing the fq (_FQ) or a tombstone (_DEL); the plan prepends
+    ``seg`` for tagged rows. With no side channel the plan is a plain
+    groupBy and ``right`` is empty; otherwise it is ONE cogroup — both
+    sides share the build-time bucketing, so no shuffle join appears and
+    neither the fq set nor the delete backlog ever reaches the driver.
+    Either way one pandas-UDF stage serves every segment."""
+    keys = [c for c in ("bucket", "seg") if c in rows.columns]
+    tagged = len(keys) > 1
+    schema = ("seg int, " if tagged else "") + _TOPK_SCHEMA
+
+    def keyed(key, left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
+        seg = int(key[1]) if tagged else 0
+        out = leaf(seg, left, right)
+        if tagged:
+            out.insert(0, "seg", np.full(len(out), seg, dtype=np.int32))
+        return out
+
     side = []
     if positions is not None:
         side.append(positions.withColumn("tag", F.lit(_POS)))
     for docs, tag in ((filter_docs, _FQ), (deleted_docs, _DEL)):
         if docs is not None:
-            side.append(docs.select("bucket", "doc_id", F.lit(tag).alias("tag")))
+            side.append(docs.select(*keys, "doc_id", F.lit(tag).alias("tag")))
     if not side:
-        return rows.groupBy("bucket").applyInPandas(
-            lambda pdf: leaf(pdf, _NO_SIDE), _TOPK_SCHEMA
+        return rows.groupBy(*keys).applyInPandas(
+            lambda key, pdf: keyed(key, pdf, _NO_SIDE), schema
         )
-    right = side[0]
-    for s in side[1:]:
-        # fq / tombstone rows carry null position columns
-        right = right.unionByName(s, allowMissingColumns=True)
+    # fq / tombstone rows carry null position columns
+    right = union_all(side)
     return (
-        rows.groupBy("bucket")
-        .cogroup(right.groupBy("bucket"))
-        .applyInPandas(leaf, _TOPK_SCHEMA)
+        rows.groupBy(*keys)
+        .cogroup(right.groupBy(*keys))
+        .applyInPandas(keyed, schema)
     )
 
 
@@ -1119,27 +1183,31 @@ def score_postings(
 ) -> DataFrame:
     """Per-bucket scoring plan over a postings table (per-leaf Scorer DAG +
     TopScoreDocCollector analog). Returns an un-merged DataFrame of local
-    top-k (doc_id, score) rows; caller applies the global merge/limit.
-    ``after``: optional (score, doc_id) cursor applied before the local
-    top-k (searchAfter paging).
+    top-k (doc_id, score) rows — (seg, doc_id, score) when ``postings``
+    carries a segment ordinal ``seg`` (see _bucket_plan); caller applies
+    the global merge/limit.
+    ``after``: optional searchAfter cursor ``(score, doc_ids)`` applied
+    before the local top-k, ``doc_ids[seg]`` being the cursor's doc id in
+    segment ``seg``'s local id space.
     ``filter_docs``: optional (bucket, doc_id) DataFrame of docs passing a
     filter query (fq) — mask-only, stats untouched; a bucket with no fq
     rows matches nothing. ``deleted_docs``: optional (bucket, doc_id)
-    DataFrame of this segment's tombstones — distributed liveDocs
-    (index/PendingDeletes.java analog). Both ride the one tagged side
-    channel of _bucket_plan, so they stay per-(segment, bucket) on the
-    executors (the LRUQueryCache bitset analog, distributed), and are
-    masked INSIDE the kernel so WAND's threshold never holds an excluded
-    doc."""
+    DataFrame of tombstones — distributed liveDocs
+    (index/PendingDeletes.java analog). Both carry ``seg`` when the
+    postings do, and ride the one tagged side channel of _bucket_plan, so
+    they stay per-(bucket, segment) on the executors (the LRUQueryCache
+    bitset analog, distributed), and are masked INSIDE the kernel so
+    WAND's threshold never holds an excluded doc."""
     has_filter = filter_docs is not None  # closures must not capture the DFs
 
-    def leaf(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
+    def leaf(seg: int, left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
         if not len(left):
             return _empty_topk()
         _, allowed, deleted = _split_side(right, has_filter)
         return _score_bucket(
             left, idfs, cache, k, op, n_query_terms, avgdl, use_wand,
-            after, deleted, allowed,
+            None if after is None else (after[0], after[1][seg]),
+            deleted, allowed,
         )
 
     rows = postings.filter(F.col("term").isin(sorted(idfs)))
@@ -1167,12 +1235,13 @@ def score_query_postings(
     ``caches``/``phrase_caches``: optional per-term / per-Phrase norm-cache
     overrides (FieldedSearcher: each field has its own avgdl, so tagged
     terms score with their field's cache; default = ``cache``).
-    Same shape as score_postings: one applyInPandas leaf per bucket, local
-    top-k out, caller merges globally.
+    Same shape as score_postings: one applyInPandas leaf per bucket (per
+    (bucket, seg) when the postings carry ``seg``), local top-k out,
+    caller merges globally.
 
     Phrase clauses (operators/query.py#Phrase — PhraseQuery as a
-    BooleanClause, search/PhraseWeight.java): pass the segment's
-    ``positions`` table and ``phrase_idfs`` (Phrase node -> summed idf,
+    BooleanClause, search/PhraseWeight.java): pass the ``positions`` table
+    (tagged with ``seg`` when the postings are) and ``phrase_idfs`` (Phrase node -> summed idf,
     float32; phrases with any absent term are simply omitted and match
     nothing). The positions rows join the side channel, so each leaf still
     sees a self-contained doc range and no shuffle joins appear anywhere;
@@ -1272,7 +1341,7 @@ def score_query_postings(
             pmasks[p] = marr
         return pscores, pmasks
 
-    def leaf(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
+    def leaf(seg: int, left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
         pos, allowed, deleted = _split_side(right, has_filter)
         # bucket doc range from whichever side has rows (a pure-phrase tree
         # has no Term-leaf postings; a term-only bucket has no positions)

@@ -185,6 +185,7 @@ def update_numeric_docvalue(
     updates.select(
         F.col("doc_id").cast("long").alias("doc_id"), F.col("value")
     ).write.mode("errorifexists").parquet(out)
-    # a cached composed docmap view is stale now
+    # the cached stored-fields frame and docmap view are stale now
+    segment.dfs.pop("_stored_fields", None)
     segment.dfs.pop("_docmap_view", None)
     return gen

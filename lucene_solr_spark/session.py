@@ -18,6 +18,14 @@ from pyspark.sql import SparkSession
 DEFAULT_SHUFFLE_PARTITIONS = 32
 
 
+def _default_driver_mem() -> str:
+    """24 GB, or half the machine's physical memory when that is less: a
+    long-lived session grows toward its heap cap before it collects, so a
+    cap above the RAM the box has invites the OOM killer."""
+    half_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**21
+    return f"{min(24 * 1024, half_mb)}m"
+
+
 def get_spark(
     app_name: str = "lucene_solr_spark",
     master: str | None = None,
@@ -27,7 +35,9 @@ def get_spark(
     """Build (or fetch) the engine SparkSession.
 
     ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` (falls back to
-    ``local[*]``) so bench/driver runs control parallelism via env.
+    ``local[*]``) so bench/driver runs control parallelism via env. The
+    driver heap is ``$SPARK_GRAFT_DRIVER_MEM``, else the smaller of 24 GB
+    and half the physical memory.
     """
     if master is None:
         cpus = os.environ.get("SPARK_GRAFT_CPUS")
@@ -51,7 +61,8 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"))
+        .config("spark.driver.memory",
+                os.environ.get("SPARK_GRAFT_DRIVER_MEM") or _default_driver_mem())
         .config("spark.ui.enabled", "false")
         .config("spark.sql.parquet.compression.codec", "zstd")
     )

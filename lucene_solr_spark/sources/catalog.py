@@ -114,7 +114,11 @@ class Segment:
         ``operators/updates.py#update_numeric_docvalue``): each sidecar
         holds (doc_id, value) for the docs that generation touched and
         newer generations win — readers see current values, postings and
-        the base docmap bytes stay untouched."""
+        the base docmap bytes stay untouched. Opened once per Segment: the
+        composed (lazy) frame is cached in ``dfs`` like the docmap view,
+        and update_numeric_docvalue drops both."""
+        if "_stored_fields" in self.dfs:
+            return self.dfs["_stored_fields"]
         dm = self.dfs.get("docmap")
         if dm is None:
             assert self.path, "segment has no path and no cached df for docmap"
@@ -128,6 +132,7 @@ class Segment:
                 .withColumn(column, F.coalesce("__dv", column))
                 .drop("__dv")
             )
+        self.dfs["_stored_fields"] = dm
         return dm
 
     def dv_generations(self) -> list[tuple[str, int]]:

@@ -20,9 +20,9 @@ SF01_DIR = "/root/testdata/sf0.01"
 # one pandas-UDF worker process (~120 MB) per thread per worker pool, so
 # the session takes SPARK_GRAFT_CPUS threads, capped at 8.
 CORES = min(int(os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count() or 8), 8)
-# The engine's 24 GB default heap lets the one long-lived test JVM grow to
-# 6+ GB resident before it collects; the suite's live data (sf0.01 at most)
-# fits in a fraction of this cap.
+# The engine's default heap (24 GB, or half the box's RAM when less) lets
+# the one long-lived test JVM grow to 6+ GB resident before it collects;
+# the suite's live data (sf0.01 at most) fits in a fraction of this cap.
 DRIVER_HEAP = "4g"
 
 

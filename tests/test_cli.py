@@ -674,7 +674,7 @@ def test_cli_fl_multi_segment_local_id_collision(spark, tmp_path, capsys):
     }
     ms = MultiSearcher.from_catalog(spark, Catalog(idx))
     want = sorted(
-        (int(r["doc_id"]), round(float(r["score"]), 6),
+        (int(r["gdoc_id"]), round(float(r["score"]), 6),
          sha[(r["segment_id"], int(r["doc_id"]))])
         for r in ms.search("order batch", k=10).collect()
     )
@@ -682,3 +682,5 @@ def test_cli_fl_multi_segment_local_id_collision(spark, tmp_path, capsys):
         (r["doc_id"], round(r["score"], 6), r["content_sha256"]) for r in recs
     )
     assert got == want
+    # printed ids are global: two segments' equal local ids stay apart
+    assert len({r["doc_id"] for r in recs}) == len(recs)

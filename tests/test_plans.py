@@ -6,6 +6,8 @@ top-k limit (two-phase retrieval / late materialization)."""
 
 from __future__ import annotations
 
+import re
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -147,3 +149,101 @@ def test_fielded_union_keeps_pruned_scans(spark, disk_seg_pos, tmp_path_factory)
     assert (
         sum("In(term" in ln or "EqualTo(term" in ln for ln in pushed) == 2
     ), "\n".join(pushed)
+
+
+@pytest.fixture(scope="module")
+def catalog3(spark, tmp_path_factory):
+    """Three positional segments of one catalog, each numbering its docs
+    from 0, with two tombstones in every segment."""
+    from lucene_solr_spark.sources.catalog import Catalog
+
+    cat = Catalog(str(tmp_path_factory.mktemp("plans3")))
+    c = synth_corpus(spark, 180, partitions=4).withColumn(
+        "part", F.abs(F.hash("path")) % 3
+    )
+    for i in range(3):
+        seg = build_index(
+            spark, c.filter(F.col("part") == i).drop("part"), out_dir=cat.root,
+            segment_id=f"s{i}", bucket_docs=32, with_positions=True,
+        )
+        cat.commit_swap(add=[seg.segment_id])
+    cat.add_deletes(spark.createDataFrame(
+        [(f"s{i}", d) for i in range(3) for d in (1, 5)],
+        "segment_id string, doc_id long",
+    ))
+    return cat
+
+
+def _last_job(spark) -> int:
+    return max(spark.sparkContext.statusTracker().getJobIdsForGroup(None),
+               default=-1)
+
+
+def _jobs_since(spark, last: int) -> int:
+    """Jobs started after job id ``last`` (the status store keeps a
+    bounded job history, so a plain count of it stops growing)."""
+    ids = spark.sparkContext.statusTracker().getJobIdsForGroup(None)
+    return sum(1 for j in ids if j > last)
+
+
+def test_catalog_query_is_one_plan(spark, catalog3):
+    """A catalog query scores every segment in ONE cogroup (one exchange
+    per side, keyed on bucket first), and `*:*` joins the tombstones once
+    and the fq sets once: the plan does not grow with the segment
+    count."""
+    from lucene_solr_spark.operators.search import MultiSearcher
+
+    ms = MultiSearcher.from_catalog(spark, catalog3)
+    plan = _plan(ms.search('"import return" public', fq="lang = 'python'"))
+    assert plan.count("FlatMapCoGroupsInPandas") == 1
+    assert plan.count("Exchange hashpartitioning(bucket") == 2
+    assert "SortMergeJoin" not in plan and "BroadcastHashJoin" not in plan
+    mplan = _plan(ms.matchall_topk(k=5, fq="lang = 'python'"))
+    joins = re.findall(r"(?:BroadcastHash|ShuffledHash|SortMerge)Join", mplan)
+    assert len(joins) == 2, mplan
+
+
+def test_catalog_query_and_fetch_job_counts(spark, catalog3):
+    """A warm catalog query runs at most 4 Spark jobs (term stats, one
+    exchange per cogroup side, the result), and a warm stored-fields fetch
+    of hits from three segments runs ONE: each Segment's stored fields are
+    opened (schema inference is a job per table) once, by the first
+    fetch. A docvalues update on that Segment is seen by the next fetch."""
+    from lucene_solr_spark.__main__ import _fetch_stored
+    from lucene_solr_spark.operators.search import MultiSearcher
+    from lucene_solr_spark.operators.updates import update_numeric_docvalue
+
+    ms = MultiSearcher.from_catalog(spark, catalog3)
+    ms.search("import", k=40).collect()  # tables opened, workers started
+    last = _last_job(spark)
+    rows = ms.search("import", k=40).collect()
+    assert _jobs_since(spark, last) <= 4
+    assert {r["segment_id"] for r in rows} == {"s0", "s1", "s2"}
+
+    segs = {s.segment_id: s for s in ms.segments}
+    wanted: dict[str, dict[int, int]] = {}
+    for r in rows:
+        wanted.setdefault(r["segment_id"], {})[r["doc_id"]] = r["gdoc_id"]
+    _fetch_stored(spark, segs, wanted, ["path"])
+    last = _last_job(spark)
+    got = _fetch_stored(spark, segs, wanted, ["path", "_version_"])
+    assert _jobs_since(spark, last) == 1
+    paths = {
+        (sid, r["doc_id"]): r["path"]
+        for sid, s in segs.items()
+        for r in s.stored_fields(spark).select("doc_id", "path").collect()
+    }
+    assert got == {
+        r["gdoc_id"]: {"path": paths[(r["segment_id"], r["doc_id"])],
+                       "_version_": 1}
+        for r in rows
+    }
+
+    sid, w = sorted(wanted.items())[0]
+    doc = min(w)
+    update_numeric_docvalue(
+        spark, segs[sid], "_version_",
+        spark.createDataFrame([(doc, 7)], "doc_id long, value long"),
+    )
+    again = _fetch_stored(spark, segs, {sid: {doc: "x"}}, ["_version_"])
+    assert again == {"x": {"_version_": 7}}

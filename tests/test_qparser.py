@@ -307,3 +307,24 @@ def test_exhaustive_and_with_absent_term(built):
     searcher, _ = built
     assert exhaustive_scores(searcher, "order zzzznotaterm", op="and").count() == 0
     assert searcher.topk("order zzzznotaterm", k=5, op="and").count() == 0
+
+
+def test_wildcard_backslash_escapes(spark):
+    """WildcardQuery escapes (search/WildcardQuery.java#toAutomaton): a
+    backslash makes the next character literal, so ``\\*``/``\\?`` match
+    a literal '*'/'?'; a trailing lone backslash is itself literal."""
+    from lucene_solr_spark.sources.catalog import Segment, SegmentStats
+
+    terms = spark.createDataFrame(
+        [(t, 1) for t in ("a*b", "a?b", "a\\b", "axb", "ab\\", "abc")],
+        "term string, df long",
+    )
+    s = Searcher(
+        spark, Segment("t", SegmentStats(n_docs=1, sum_ttf=1), dfs={"terms": terms})
+    )
+    assert s.expand_terms(wildcard="a*b") == ["a*b", "a?b", "a\\b", "axb"]
+    assert s.expand_terms(wildcard="a\\*b") == ["a*b"]
+    assert s.expand_terms(wildcard="a\\?b") == ["a?b"]
+    assert s.expand_terms(wildcard="a\\\\b") == ["a\\b"]
+    assert s.expand_terms(wildcard="a\\bc") == ["abc"]
+    assert s.expand_terms(wildcard="ab\\") == ["ab\\"]
