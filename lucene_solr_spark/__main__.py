@@ -81,7 +81,7 @@ def _build(args) -> int:
 def _disjoint_doc_ids(spark, segments) -> bool:
     """True iff the segments' doc-id ranges are pairwise disjoint — the
     precondition for serving a segment LIST in ONE flat doc-id space
-    (edismax/surround per-field segment lists). Independently built
+    (edismax's per-field segment lists). Independently built
     segments each assign ids from 0 (why MultiSearcher applies doc_base
     offsets), so overlap is the common case and must be refused rather
     than silently merging different documents' postings. Ranges come from
@@ -148,7 +148,7 @@ def _search(args) -> int:
     if isinstance(cat, int):
         return cat
     spark = get_spark(app_name="fulltext-search")
-    printed = "doc_id"  # branches serving gdoc-space results override
+    printed = "gdoc_id"  # edismax serves flat doc ids instead
     if getattr(args, "deftype", "lucene") == "edismax":
         # eDisMax request (ExtendedDismaxQParser analog): the catalog's
         # single field is addressed as 'content' in qf/pf specs
@@ -228,11 +228,20 @@ def _search(args) -> int:
             params["bf"] = args.bf          # repeatable dl functions
         if args.boost:
             params["boost"] = args.boost    # multiplicative function
-        hits = edismax_topk(spark, {"content": list(segs)}, params, k=args.k)
+        # liveDocs: with disjoint ranges a local id is the flat id
+        dead = cat.deletes(spark)
+        hits = edismax_topk(
+            spark, {"content": list(segs)}, params, k=args.k,
+            deletes=dead.filter(
+                dead["segment_id"].isin([sg.segment_id for sg in segs])
+            ).select("doc_id"),
+        )
+        printed = "doc_id"
     elif getattr(args, "deftype", "lucene") == "surround":
         # {!surround} request: W/N distance ops + truncation on the span
-        # kernel (operators/surround.py)
-        from .operators.spans import span_topk
+        # kernel (operators/surround.py), scored on the catalog searcher:
+        # truncation expands against the merged terms dict, stats are
+        # global and tombstoned docs are excluded, as on the classic path
         from .operators.surround import SurroundParseError, parse_surround
 
         if args.fq:
@@ -242,22 +251,10 @@ def _search(args) -> int:
                 file=sys.stderr,
             )
             return 2
-        # truncation expands against the UNION terms dict; the span
-        # kernel takes the segment list (global stats) sharing ONE flat
-        # doc-id space — ranges must be disjoint
-        segs = cat.segments()
-        if len(segs) > 1 and not _disjoint_doc_ids(spark, segs):
-            print(
-                json.dumps({"error": "segments' doc-id ranges overlap; "
-                            "surround needs one global doc-id space — "
-                            "run merge"}),
-                file=sys.stderr,
-            )
-            return 2
-        ex = MultiSearcher.from_catalog(spark, cat).expand_terms
+        ms = MultiSearcher.from_catalog(spark, cat)
         try:
             node = parse_surround(
-                args.query, expand=lambda pfx: ex(prefix=pfx)
+                args.query, expand=lambda pfx: ms.expand_terms(prefix=pfx)
             )
         except SurroundParseError as exc:
             # surface the parse failure the way the local-params
@@ -265,11 +262,7 @@ def _search(args) -> int:
             print(json.dumps({"error": f"surround parse: {exc}"}),
                   file=sys.stderr)
             return 2
-        # liveDocs: tombstoned docs are excluded here exactly as on the
-        # classic (MultiSearcher) path
-        tomb = [int(r.doc_id) for r in cat.deletes(spark).collect()]
-        hits = span_topk(spark, list(segs), node, k=args.k,
-                         deleted=tomb or None)
+        hits = ms.span_topk(node, k=args.k)
     elif getattr(args, "deftype", "lucene") == "xmlparser":
         # {!xmlparser} request: XML element tree -> engine Boolean tree,
         # evaluated across the WHOLE catalog (MultiSearcher, global stats)
@@ -289,7 +282,6 @@ def _search(args) -> int:
             hits = ms.matchall_topk(k=args.k, fq=args.fq)
         else:
             hits = ms.topk_query(tree, k=args.k, fq=args.fq)
-        printed = "gdoc_id"
     elif (
         getattr(args, "deftype", "lucene") in ("simple", "maxscore")
         or args.query.lstrip().startswith("{!")
@@ -341,7 +333,6 @@ def _search(args) -> int:
             )
             return 2
         hits = ms.topk_query(node, k=args.k, fq=args.fq)
-        printed = "gdoc_id"
     elif getattr(args, "synonyms", None):
         # query-time synonym expansion against the plain catalog
         # (global stats, liveDocs excluded)
@@ -352,7 +343,6 @@ def _search(args) -> int:
         hits = MultiSearcher.from_catalog(spark, cat).search_synonyms(
             args.query, rules, k=args.k, fq=args.fq
         )
-        printed = "gdoc_id"
     else:
         from .plans.qparser import QueryParseError
 
@@ -363,7 +353,6 @@ def _search(args) -> int:
             print(json.dumps({"error": f"query parse: {exc}"}),
                   file=sys.stderr)
             return 2
-        printed = "gdoc_id"
     rows = hits.collect()
     extra: dict[int, dict] = {}
     fl = [c.strip() for c in (getattr(args, "fl", None) or "").split(",")
@@ -382,7 +371,7 @@ def _search(args) -> int:
                     row_key(r)
                 )
         else:
-            # flat doc-id space: edismax/surround serve it only after the
+            # flat doc-id space: edismax serves it only after the
             # disjoint-ranges guard, so a raw id matches in at most one
             # docmap
             row_key = lambda r: int(r[printed])  # noqa: E731

@@ -251,21 +251,16 @@ def caverphone2_sql(col: str) -> str:
 #   * nysiis_col / nysiis_sql — the same algorithm as one ordered
 #     regexp_replace chain rendered into pyspark Columns and DuckDB SQL
 #     (cross-engine parity by construction, like Caverphone/DM). The
-#     scan's mutated-prev semantics are reproduced by resolving W runs
-#     to fixpoint first, then iterating the [H-rules, W] block (each H
-#     resolution can expose a W and vice versa); tests/test_phonetic_
-#     nysiis.py asserts chain == scan over the corpus vocabulary and
-#     hypothesis-random words. First char is emitted verbatim
-#     (protected as uppercase through the lowercase-context rules).
-#
-# Documented bound: H/W runs longer than the 4 chain iterations (e.g.
-# 'bhhhhh', 'ahwwwww') may deviate from the scan; no [a-z]+ corpus term
-# comes near it and the parity test screens random inputs.
+#     scan's mutated-prev semantics reduce to one rule per H/W run shape
+#     (see _nysiis_stage2), so runs of any length resolve in one pass;
+#     tests/test_phonetic_nysiis.py asserts chain == scan over the corpus
+#     vocabulary and hypothesis-random words. First char is emitted
+#     verbatim (protected as uppercase through the lowercase-context
+#     rules).
 # ---------------------------------------------------------------------------
 
 _NY_VOWELS = "aeiou"
-_NY_V_CLASS = "[aAEIOU]"  # post-collapse vowels + protected first char
-_NY_NV_CLASS = "[^aAEIOU]"
+_NY_V_CLASS = "[aAEIOU]"  # transcoded vowels + protected first char
 
 NYSIIS_FIRST: list[tuple[str, str]] = [
     ("^mac", "mcc"),
@@ -282,25 +277,15 @@ NYSIIS_LAST: list[tuple[str, str]] = [
 
 def _nysiis_stage2() -> list[tuple[str, str]]:
     """Tail transcode + dedup + trailing trims, first char protected."""
-    # An H after a W copies it only once that W is settled: a W after an
-    # unresolved H may still turn into a vowel, and an H between two
-    # vowels is kept ('ahwha' -> AH). A copied W next to a consonant or
-    # the end heals itself through the W rule below.
-    hw_block = [
-        ("([^aAEIOUw])h", "<1><1>"),
-        (f"(w)h({_NY_NV_CLASS}|$)", "<1><1><2>"),
-        ("([^aAEIOUhw]w+)h", "<1>w"),
-        (f"({_NY_V_CLASS})h({_NY_NV_CLASS})", "<1><1><2>"),
-        (f"({_NY_V_CLASS})h$", "<1><1>"),
-        (f"({_NY_V_CLASS})w", "<1><1>"),
-    ]
     # ORDER: the scan's SCH/KN/PH checks see the RAW right-context, so
     # they must run before k->c (which manufactures c) and m->n (which
-    # manufactures n) can corrupt it
+    # manufactures n) can corrupt it. SCH writes SSS over itself, and the
+    # scan reads its last S as the start of the next SCH: 'schch' is one
+    # S run.
     rules: list[tuple[str, str]] = [
         ("ev", "af"),
         ("[eiou]", "a"),
-        ("sch", "sss"),
+        ("s(ch)+", "sss"),
         ("kn", "nn"),
         ("k", "c"),
         ("ph", "ff"),
@@ -308,18 +293,27 @@ def _nysiis_stage2() -> list[tuple[str, str]]:
         ("z", "s"),
         ("m", "n"),
     ]
-    rules += [(f"({_NY_V_CLASS})w", "<1><1>")] * 4  # W runs to fixpoint first
-    for _ in range(4):
-        rules += hw_block
+    # H and W are the only letters whose transcode reads the (already
+    # transcoded) previous char, so each maximal [hw] run resolves from
+    # the char p before it and, for a final H, from the raw char after
+    # it. After a vowel p every letter of the run copies p, except a final
+    # H before a vowel, which stays H. After any other p, each H copies p
+    # up to the first W, and from that W on every letter is W. A copy of
+    # p merges into p in the run collapse below, so copies are dropped.
+    # Marker 1 is an H before a vowel (non-letters are already stripped).
+    rules += [
+        ("ha", "1a"),
+        (f"({_NY_V_CLASS})[hw]+", "<1>"),
+        ("([^aAEIOUhw1])[h1]+", "<1>"),
+        ("w[hw1]+", "w"),
+        ("1", "h"),
+    ]
     # run collapse == the scan's append-if-different key build
     for c in "abcdfghjlnprstvwxy":
         rules.append((f"{c}{{2,}}", c))
-    # the protected first char can be duplicated by the H/W prev-copy
-    # rules (uppercase) and followed by equal lowercase output: collapse
-    # mixed-case runs at the head in one class rule per letter
+    # the protected first char can be followed by equal lowercase output
     for c in "abcdefghijklmnopqrstuvwxyz":
-        u = c.upper()
-        rules.append((f"^{u}[{u}{c}]+", u))
+        rules.append((f"^{c.upper()}{c}+", c.upper()))
     rules += [
         ("(.)s$", "<1>"),
         ("ay$", "y"),

@@ -93,8 +93,8 @@ def automaton_to_spans(auto: TermAutomaton, max_paths: int = 256,
 def automaton_topk(spark, segment, auto: TermAutomaton, k: int = 10):
     """Top-k BM25 for a term automaton: rewrite to spans, run the span
     kernel (freq = accepted-window count, idf over the distinct terms).
-    ``segment`` may be a Segment or a LIST of segments (span_topk's
-    MultiReader support carries through)."""
+    ``segment`` may be a Segment or a LIST of segments, served by
+    span_topk as one catalog searcher."""
     from .spans import span_topk
 
     return span_topk(spark, segment, automaton_to_spans(auto), k=k)

@@ -46,7 +46,7 @@ from ..functions.analysis import tokenize_text
 from ..sources.catalog import Segment
 from . import bm25
 from .phrase import bucket_phrase_freqs, phrase_offsets
-from .search import _decode_block
+from .search import _decode_block, _excluded, union_all
 
 _TOPK_SCHEMA = "doc_id long, score float"
 
@@ -205,6 +205,7 @@ def edismax_topk(
     segments: dict[str, Segment],
     params: dict,
     k: int = 10,
+    deletes: DataFrame | None = None,
 ) -> DataFrame:
     """Top-k for an edismax request. ``params`` keys: q (user query),
     qf ("field^boost ..."), optional pf / pf2 / pf3, tie (float), mm
@@ -221,7 +222,9 @@ def edismax_topk(
     df / N / sum_ttf combine exactly so the ranking equals the merged
     segment's, the ExactStatsCache discipline). All involved segments
     must share the corpus doc-id assignment and bucket_docs (asserted);
-    pf fields need positional postings.
+    pf fields need positional postings. ``deletes``: optional (doc_id)
+    tombstones in that shared doc-id space (liveDocs): they ride the same
+    union and are masked before the per-bucket top-k, never collected.
 
     Pinned boost arithmetic (cross-engine f32 contract): after the f32
     clause fold — bq contributions f32(raw_bm25 · bq_boost) in given
@@ -420,6 +423,10 @@ def edismax_topk(
                 if t in dmx:
                     nm += dmx[t][1]
             ok &= nm >= mm_eff
+        # liveDocs: tombstones (kind == 3 rows) never match
+        ok &= ~_excluded(
+            base, span, pdf.loc[pdf["kind"] == 3, "doc_id"].to_numpy(np.int64)
+        )
         if not ok.any():
             return empty
 
@@ -567,8 +574,14 @@ def edismax_topk(
                 null_bin.alias("end_bin"),
             )
         )
-    u = parts[0]
-    for p in parts[1:]:
-        u = u.unionByName(p)
-    per_bucket = u.groupBy("bucket").applyInPandas(score_bucket, _TOPK_SCHEMA)
+    if deletes is not None:
+        # tombstone rows (kind == 3); union_all nulls the other columns
+        parts.append(deletes.select(
+            F.lit(3).alias("kind"),
+            F.floor(F.col("doc_id") / next(iter(bd))).cast("long").alias("bucket"),
+            F.col("doc_id").cast("long"),
+        ))
+    per_bucket = union_all(parts).groupBy("bucket").applyInPandas(
+        score_bucket, _TOPK_SCHEMA
+    )
     return per_bucket.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)

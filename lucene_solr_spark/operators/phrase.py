@@ -13,9 +13,13 @@ Reference semantics being re-expressed (SURVEY.md §2.C "PhraseQuery"):
 
 Spark restatement: the positions table is (term, bucket, doc_id, norm_byte,
 pos_bin) — one row per (term, doc) with delta+FOR-packed in-doc positions.
-A phrase query filters that table to its distinct terms (parquet row-group
-pruning on the range-partitioned ``term`` column) and scores per bucket in
-applyInPandas.
+Phrase queries run on the catalog searcher (search.py): ``phrase_topk`` is
+a Phrase leaf of the Boolean-tree scorer, and ``multi_phrase_topk`` is
+MultiSearcher.topk_multi_phrase. Either filters the positions table to its
+distinct terms (parquet row-group pruning on the range-partitioned
+``term`` column) and calls this module's per-bucket kernels
+(``bucket_phrase_freqs``, ``bucket_multi_phrase_freqs``) once per
+(bucket, segment) leaf.
 
 Exact path (slop=0) is vectorized ACROSS docs: per (term,doc) rows are
 decoded once, positions concatenated with a doc-keyed offset
@@ -42,15 +46,12 @@ import heapq
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from ..functions.analysis import tokenize_text
 from ..functions.packing import delta_decode, unpack_ints
 from ..sources.catalog import Segment
-from . import bm25
-
-_TOPK_SCHEMA = "doc_id long, score float"
-
+from .query import Phrase
+from .search import Searcher
 
 def phrase_topk(
     spark: SparkSession,
@@ -58,46 +59,15 @@ def phrase_topk(
     phrase_text: str,
     k: int = 10,
     slop: int = 0,
-    deleted=None,
 ) -> DataFrame:
     """Top-k docs containing the phrase (pinned-tokenizer order).
     ``slop=0``: exact adjacency; ``slop>0``: SloppyPhraseMatcher semantics
-    (incl. repeat groups) with fractional sloppy freq. ``deleted``:
-    optional sorted int64 array of tombstoned doc_ids, excluded before the
-    local top-k (liveDocs analog)."""
-    assert segment.has_table("positions"), (
-        "segment was built without positions (build_index(with_positions=True))"
+    (incl. repeat groups) with fractional sloppy freq. A Phrase leaf on
+    the segment's searcher: the tree scorer runs bucket_phrase_freqs with
+    the summed idf and this module's float32 op order."""
+    return Searcher(spark, segment).topk_query(
+        Phrase(tuple(tokenize_text(phrase_text)), slop), k
     )
-    terms_seq = tokenize_text(phrase_text)
-    if not terms_seq:
-        return spark.createDataFrame([], _TOPK_SCHEMA)
-    distinct = sorted(set(terms_seq))
-
-    # stats pre-pass (Weight analog): every phrase term must exist
-    stats_df = (
-        segment.table(spark, "terms")
-        .filter(F.col("term").isin(distinct))
-        .select("term", "df")
-        .collect()
-    )
-    df_by_term = {r["term"]: int(r["df"]) for r in stats_df}
-    if len(df_by_term) < len(distinct):
-        return spark.createDataFrame([], _TOPK_SCHEMA)
-    n_docs = segment.stats.n_docs
-    # idf summed over ALL phrase positions (duplicates counted), float64 then
-    # applied in float32 — BM25Similarity#idfExplain(collectionStats, termStats[])
-    idf_sum = np.float32(sum(bm25.idf(n_docs, df_by_term[t]) for t in terms_seq))
-    cache = bm25.norm_cache(segment.stats.avgdl)
-    offsets_by_term = phrase_offsets(terms_seq)
-
-    def score_bucket(pdf: pd.DataFrame) -> pd.DataFrame:
-        return _phrase_score_bucket(
-            pdf, offsets_by_term, idf_sum, cache, k, slop, deleted
-        )
-
-    rows = segment.table(spark, "positions").filter(F.col("term").isin(distinct))
-    per_bucket = rows.groupBy("bucket").applyInPandas(score_bucket, _TOPK_SCHEMA)
-    return per_bucket.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
 
 
 def phrase_offsets(terms_seq) -> dict[str, list[int]]:
@@ -109,12 +79,6 @@ def phrase_offsets(terms_seq) -> dict[str, list[int]]:
     return out
 
 
-def _empty() -> pd.DataFrame:
-    return pd.DataFrame(
-        {"doc_id": np.array([], dtype=np.int64), "score": np.array([], dtype=np.float32)}
-    )
-
-
 def bucket_phrase_freqs(
     pdf: pd.DataFrame,
     offsets_by_term: dict[str, list[int]],
@@ -123,8 +87,9 @@ def bucket_phrase_freqs(
     """Phrase occurrence counting for ONE doc-space bucket. ``pdf`` holds
     this bucket's positions rows already filtered to the phrase's distinct
     terms. Returns (doc_ids, freqs, norm_bytes) for docs with freq > 0 —
-    the per-bucket kernel shared by phrase_topk and the Boolean-tree
-    scorer's Phrase clauses (search.py#score_query_postings)."""
+    the per-bucket kernel of the Boolean-tree scorer's Phrase clauses
+    (search.py#score_query_postings, which phrase_topk runs) and of
+    edismax's phrase boosts."""
     n_terms = len(offsets_by_term)
     empty = (
         np.array([], dtype=np.int64),
@@ -192,30 +157,6 @@ def bucket_phrase_freqs(
         return empty
     norms = np.array([norm_by_doc[int(d)] for d in ids], dtype=np.uint8)
     return ids, freqs, norms
-
-
-def _phrase_score_bucket(
-    pdf: pd.DataFrame,
-    offsets_by_term: dict[str, list[int]],
-    idf_sum: np.float32,
-    cache: np.ndarray,
-    k: int,
-    slop: int,
-    deleted=None,
-) -> pd.DataFrame:
-    """One doc-space bucket: phrase freq per doc, BM25, local top-k."""
-    ids, freqs, norms = bucket_phrase_freqs(pdf, offsets_by_term, slop)
-    if deleted is not None and len(deleted) and ids.size:
-        keep = ~np.isin(ids, np.asarray(deleted, dtype=np.int64))
-        ids, freqs, norms = ids[keep], freqs[keep], norms[keep]
-    if ids.size == 0:
-        return _empty()
-
-    f = freqs.astype(np.float32)
-    denom_add = cache[norms]
-    scores = (idf_sum * (f / (f + denom_add))).astype(np.float32)
-    order = np.lexsort((ids, -scores))[: min(k, ids.size)]
-    return pd.DataFrame({"doc_id": ids[order], "score": scores[order]})
 
 
 def _exact_freqs(
@@ -634,59 +575,13 @@ def multi_phrase_topk(
     slots: list,
     k: int = 10,
     slop: int = 0,
-    deleted=None,
 ) -> DataFrame:
-    """Top-k docs matching a MultiPhraseQuery. ``slop=0``: exact adjacency;
-    ``slop>0``: sloppy matching with each slot treated as ONE pseudo-term
-    whose raw positions are the sorted union of its members' positions
-    (MultiPhraseQuery's UnionPostingsEnum), run through the same
+    """Top-k docs matching a MultiPhraseQuery (search.py#MultiSearcher
+    .topk_multi_phrase on the segment's searcher). ``slop=0``: exact
+    adjacency; ``slop>0``: sloppy matching with each slot treated as ONE
+    pseudo-term whose raw positions are the sorted union of its members'
+    positions (MultiPhraseQuery's UnionPostingsEnum), run through the same
     SloppyPhraseMatcher walk as plain phrases; slots whose member sets
     intersect (transitively) form a repeat group — their legs must occupy
     distinct raw positions, mirroring the repeating-pps discipline."""
-    assert segment.has_table("positions"), (
-        "segment was built without positions (build_index(with_positions=True))"
-    )
-    slots = [tuple(s) for s in slots]
-    if not slots or any(not s for s in slots):
-        return spark.createDataFrame([], _TOPK_SCHEMA)
-    distinct = sorted({t for s in slots for t in s})
-
-    stats_df = (
-        segment.table(spark, "terms")
-        .filter(F.col("term").isin(distinct))
-        .select("term", "df")
-        .collect()
-    )
-    df_by_term = {r["term"]: int(r["df"]) for r in stats_df}
-    # a slot with no present member can never match
-    if any(all(t not in df_by_term for t in s) for s in slots):
-        return spark.createDataFrame([], _TOPK_SCHEMA)
-    n_docs = segment.stats.n_docs
-    # idf over present (slot, member) pairs, slot order then member order
-    idf_sum = np.float32(
-        sum(
-            bm25.idf(n_docs, df_by_term[t])
-            for s in slots
-            for t in s
-            if t in df_by_term
-        )
-    )
-    cache = bm25.norm_cache(segment.stats.avgdl)
-    present = sorted(t for t in distinct if t in df_by_term)
-
-    def score_bucket(pdf: pd.DataFrame) -> pd.DataFrame:
-        ids, freqs, norms = bucket_multi_phrase_freqs(pdf, slots, slop)
-        if deleted is not None and len(deleted) and ids.size:
-            keep = ~np.isin(ids, np.asarray(deleted, dtype=np.int64))
-            ids, freqs, norms = ids[keep], freqs[keep], norms[keep]
-        if ids.size == 0:
-            return _empty()
-        f = freqs.astype(np.float32)
-        denom_add = cache[norms]
-        scores = (idf_sum * (f / (f + denom_add))).astype(np.float32)
-        order = np.lexsort((ids, -scores))[: min(k, ids.size)]
-        return pd.DataFrame({"doc_id": ids[order], "score": scores[order]})
-
-    rows = segment.table(spark, "positions").filter(F.col("term").isin(present))
-    per_bucket = rows.groupBy("bucket").applyInPandas(score_bucket, _TOPK_SCHEMA)
-    return per_bucket.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
+    return Searcher(spark, segment).topk_multi_phrase(slots, k, slop)

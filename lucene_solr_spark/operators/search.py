@@ -606,6 +606,8 @@ class MultiSearcher:
             return self._empty()
         # GLOBAL dfs and N — identical to a merged index
         idfs, syn_idfs, phrase_idfs = _tree_idfs(q, stats, self.n_docs)
+        if not (idfs or syn_idfs or phrase_idfs):
+            return self._empty()  # no leaf can match: scan nothing
         if phrases:
             assert all(s.has_table("positions") for s in self.segments), (
                 "phrase clauses need a positional index in every segment "
@@ -643,6 +645,78 @@ class MultiSearcher:
             )).alias("gdoc_id"),
             "score",
         ).orderBy(F.desc("score"), F.asc("gdoc_id")).limit(k)
+
+    def topk_multi_phrase(self, slots: list, k: int = 10, slop: int = 0) -> DataFrame:
+        """MultiPhraseQuery (search/MultiPhraseQuery.java): slot i of the
+        phrase accepts any member of ``slots[i]``. ``slop=0`` is exact
+        adjacency; ``slop>0`` walks each slot as ONE leg over the union of
+        its members' positions (phrase.py#bucket_multi_phrase_freqs has
+        the pinned semantics). idf sums every PRESENT (slot, member) term,
+        slot order then member order (MultiPhraseWeight); a slot with no
+        present member matches nothing."""
+        from .phrase import bucket_multi_phrase_freqs
+
+        slots = [tuple(s) for s in slots]
+        stats = self.term_stats(sorted({t for s in slots for t in s}))
+        if not slots or not all(any(t in stats for t in s) for s in slots):
+            return self._empty()
+        idf_sum = np.float32(
+            sum(stats[t].idf for s in slots for t in s if t in stats)
+        )
+        return self._positional_topk(
+            stats, idf_sum,
+            lambda rows: bucket_multi_phrase_freqs(rows, slots, slop), k,
+        )
+
+    def span_topk(self, node, k: int = 10) -> DataFrame:
+        """Top-k BM25 over a span query tree (spans.py — SpanWeight):
+        freq = fractional span freq, idf = sum over the distinct SCORING
+        terms present (a SpanNot's exclusion side gates but never scores);
+        no hit unless every required term is present."""
+        from .spans import _required_terms, bucket_span_freqs, scoring_terms, span_terms
+
+        required = _required_terms(node)
+        stats = self.term_stats(sorted(span_terms(node)))
+        if not stats or any(t not in stats for t in required):
+            return self._empty()
+        idf_sum = np.float32(
+            sum(stats[t].idf for t in sorted(scoring_terms(node)) if t in stats)
+        )
+        return self._positional_topk(
+            stats, idf_sum,
+            lambda rows: bucket_span_freqs(rows, node, required), k,
+        )
+
+    def _positional_topk(self, terms, idf_sum: np.float32, freqs, k: int) -> DataFrame:
+        """One plan for the positional scorers, each a pseudo-term over the
+        catalog's leaves like PhraseWeight and SpanWeight: every segment's
+        positions rows of ``terms`` go through _bucket_plan with the
+        tombstones on its side channel. In a leaf, ``freqs(rows)`` gives
+        (doc_ids, freqs, norm_bytes); each doc scores
+        f32(idf_sum * (f / (f + cache[norm_byte]))), tombstones are masked
+        before the local top-k, and _merge merges."""
+        assert all(s.has_table("positions") for s in self.segments), (
+            "positional queries need a positional index in every segment "
+            "(build_index(with_positions=True))"
+        )
+        cache = self._cache  # closures must not capture the searcher
+
+        def leaf(seg: int, left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
+            ids, fr, norms = freqs(left)
+            if not ids.size:
+                return _empty_topk()
+            _, _, deleted = _split_side(right, False)
+            base = int(ids.min())
+            span = int(ids.max()) - base + 1
+            f = fr.astype(np.float32)
+            score = np.zeros(span, dtype=np.float32)
+            score[ids - base] = idf_sum * (f / (f + cache[norms]))
+            hit = np.zeros(span, dtype=bool)
+            hit[ids - base] = True
+            return _local_topk(hit & ~_excluded(base, span, deleted), score, base, k)
+
+        rows = self._segs_table("positions").filter(F.col("term").isin(sorted(terms)))
+        return self._merge(_bucket_plan(rows, leaf, None, self._tombstones()), k)
 
     def expand_terms(
         self,
@@ -780,15 +854,6 @@ class Searcher(MultiSearcher):
         """The cached (bucket, doc_id) set of docs passing ``fq``."""
         return self._fq_docs(self.segment, fq)
 
-    def topk_multi_phrase(self, slots: list, k: int = 10, slop: int = 0) -> DataFrame:
-        """MultiPhraseQuery (search/MultiPhraseQuery.java): slot i of the
-        phrase accepts any member of ``slots[i]``; ``slop`` enables sloppy
-        matching over slot-union legs. See phrase.py#multi_phrase_topk for
-        the pinned semantics."""
-        from .phrase import multi_phrase_topk
-
-        return multi_phrase_topk(self.spark, self.segment, slots, k=k, slop=slop)
-
     def topk_with_fields(self, query_text: str, k: int = 10, **kw) -> DataFrame:
         """Two-phase retrieval: ids+scores first, docmap fields after limit."""
         hits = self.topk(query_text, k, **kw)
@@ -846,12 +911,11 @@ class Searcher(MultiSearcher):
     # -- alternative similarities (search/similarities/*.java) --------------
 
     def topk_sim(
-        self, query_text: str, similarity, k: int = 10, op: str = "or", deleted=None
+        self, query_text: str, similarity, k: int = 10, op: str = "or"
     ) -> DataFrame:
         """Top-k under a pluggable Similarity (operators/similarity.py).
         Always exhaustive: block-max impacts bound only the BM25 formula
-        (see similarity.py docstring), so WAND stays a BM25 feature.
-        ``deleted``: optional tombstoned doc_id array (liveDocs)."""
+        (see similarity.py docstring), so WAND stays a BM25 feature."""
         from .similarity import SIMILARITIES
 
         sim = SIMILARITIES[similarity]() if isinstance(similarity, str) else similarity
@@ -869,7 +933,7 @@ class Searcher(MultiSearcher):
         n_req = len(q_terms)
 
         def score_bucket(pdf: pd.DataFrame) -> pd.DataFrame:
-            return _score_bucket_sim(pdf, states, sim, k, op, n_req, deleted)
+            return _score_bucket_sim(pdf, states, sim, k, op, n_req)
 
         rows_df = self.postings.filter(F.col("term").isin(sorted(states)))
         per_bucket = rows_df.groupBy("bucket").applyInPandas(
@@ -884,12 +948,10 @@ class Searcher(MultiSearcher):
         terms: list[str],
         k: int = 10,
         boost: float = 1.0,
-        deleted=None,
     ) -> DataFrame:
         """ConstantScoreQuery over a term-set union (the default rewrite of
         prefix/wildcard/regexp queries in the reference): every matching
-        doc scores ``boost``, tie-break doc_id asc -> top-k = first k ids.
-        ``deleted``: optional tombstoned doc_id array, excluded (liveDocs)."""
+        doc scores ``boost``, tie-break doc_id asc -> top-k = first k ids."""
         if not terms:
             return self._empty()
         from .merge import decode_postings
@@ -902,11 +964,6 @@ class Searcher(MultiSearcher):
             .select("doc_id")
             .distinct(),
         )
-        if deleted is not None and len(deleted):
-            tomb = self.spark.createDataFrame(
-                [(int(d),) for d in deleted], "doc_id long"
-            )
-            docs = docs.join(F.broadcast(tomb), "doc_id", "left_anti")
         return (
             docs.orderBy("doc_id")
             .limit(k)
@@ -1245,8 +1302,8 @@ def score_query_postings(
     float32; phrases with any absent term are simply omitted and match
     nothing). The positions rows join the side channel, so each leaf still
     sees a self-contained doc range and no shuffle joins appear anywhere;
-    phrase freqs are computed by the same vectorized bucket kernel as
-    phrase_topk (phrase.py#bucket_phrase_freqs)."""
+    phrase freqs come from the vectorized bucket kernel
+    phrase.py#bucket_phrase_freqs."""
     from .phrase import bucket_phrase_freqs, phrase_offsets
     from .query import eval_node
 
@@ -1332,7 +1389,7 @@ def score_query_postings(
                     pcch = phrase_caches.get(p, cache) if phrase_caches else cache
                     f = freqs.astype(np.float32)
                     rel = ids - base
-                    # float32 op order pinned to phrase.py/_phrase_score_bucket
+                    # float32 op order of MultiSearcher._positional_topk
                     sarr[rel] = (
                         phrase_idfs[p] * (f / (f + pcch[norms]))
                     ).astype(np.float32)
@@ -1564,7 +1621,6 @@ def _score_bucket_sim(
     k: int,
     op: str,
     n_query_terms: int,
-    deleted=None,
 ) -> pd.DataFrame:
     """Per-bucket scoring under a pluggable Similarity (exhaustive).
     Same accumulation contract as the BM25 path: float32, lexicographic
@@ -1585,8 +1641,6 @@ def _score_bucket_sim(
             acc[rel] += sim.score_block(freqs, norms, st)
             hit[rel] += 1
     mask = (hit == n_query_terms) if op == "and" else (hit > 0)
-    if deleted is not None:
-        mask &= ~_excluded(base, span, np.asarray(deleted, dtype=np.int64))
     return _local_topk(mask, acc, base, k)
 
 

@@ -37,15 +37,18 @@ scalar oracle in tests/oracle_spans.py mirrors EXACTLY this):
   slack = (max_end - min_start) - sum(clause span lengths) <= slop,
   contributing 1/(1+slack). The NearSpansUnordered analog.
 
-Spark restatement: identical plan shape to operators/phrase.py — filter
-the positions table to the query's distinct terms (range-partitioned
-``term`` column -> parquet row-group pruning), applyInPandas per doc-space
-bucket, candidate docs gated by the clause-term conjunction before any
-per-doc Python runs, local top-k per bucket, global merge with the pinned
-(score desc, doc_id asc) tie-break. Scale: per-bucket work is bounded by
-the fixed bucket size; candidate docs (conjunction of all clause terms)
-are few, so the per-candidate walks are off the hot path exactly as in
-the sloppy-phrase kernel.
+Spark restatement: a span query is one more Weight on the catalog
+searcher (search.py#MultiSearcher.span_topk), with the same plan as a
+multi-phrase query: the positions table filtered to the query's distinct
+terms (range-partitioned ``term`` column -> parquet row-group pruning),
+one pandas-UDF leaf per (doc-space bucket, segment) with the tombstones on
+its side channel, a local top-k, and the catalog merge with the pinned
+(score desc, gdoc_id asc) tie-break. This module holds the node types, the
+per-doc span walk and the per-bucket kernel ``bucket_span_freqs``, whose
+candidate gate (the clause-term conjunction) runs before any per-doc
+Python. Per-bucket work is bounded by the fixed bucket size, and the
+candidates are few, so the per-candidate walks are off the hot path
+exactly as in the sloppy-phrase kernel.
 """
 
 from __future__ import annotations
@@ -56,13 +59,10 @@ from dataclasses import dataclass
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from ..functions.packing import delta_decode, unpack_ints
 from ..sources.catalog import Segment
-from . import bm25
-
-_TOPK_SCHEMA = "doc_id long, score float"
+from .search import MultiSearcher, Searcher
 
 __all__ = [
     "SpanTerm",
@@ -76,6 +76,7 @@ __all__ = [
     "span_terms",
     "doc_spans",
     "span_freq",
+    "bucket_span_freqs",
     "span_topk",
 ]
 
@@ -408,73 +409,15 @@ def span_freq(node, positions: dict[str, np.ndarray]) -> float:
     )
 
 
-def span_topk(
-    spark: SparkSession,
-    segment,
-    node,
-    k: int = 10,
-    deleted=None,
-) -> DataFrame:
-    """Top-k BM25 over a span query tree. Scoring mirrors phrase_topk:
-    pseudo-term freq = fractional span freq, idf = sum of the distinct
-    clause terms' idfs, byte4 norm cache tf_part, float32, tie-break
-    (score desc, doc_id asc).
-
-    ``segment`` is one Segment or a LIST of segments sharing the global
-    doc-id space (the MultiReader shape): df / N / sum_ttf combine
-    exactly, so a live multi-segment index ranks identically to its
-    forced merge — the same ExactStatsCache discipline as MultiSearcher
-    and multi-field edismax."""
-    segs = list(segment) if isinstance(segment, (list, tuple)) else [segment]
-    assert segs and all(sg.has_table("positions") for sg in segs), (
-        "span queries need a positional index (build_index(with_positions=True))"
-    )
-    bd = {sg.stats.bucket_docs for sg in segs}
-    assert len(bd) == 1, f"segments disagree on bucket_docs: {bd}"
-    distinct = sorted(span_terms(node))
-    if not distinct:
-        return spark.createDataFrame([], _TOPK_SCHEMA)
-
-    df_by_term: dict[str, int] = {}
-    for sg in segs:
-        for r in (
-            sg.table(spark, "terms")
-            .filter(F.col("term").isin(distinct))
-            .select("term", "df")
-            .collect()
-        ):  # df sums across segments (disjoint doc sets)
-            df_by_term[r["term"]] = df_by_term.get(r["term"], 0) + int(r["df"])
-    # conjunction-gated candidates only make sense when every REQUIRED term
-    # exists; SpanOr alternatives may be absent. Required terms = all terms
-    # outside any SpanOr (conservative: gate on terms required by ALL paths).
-    required = _required_terms(node)
-    if any(t not in df_by_term for t in required):
-        return spark.createDataFrame([], _TOPK_SCHEMA)
-    n_docs = sum(sg.stats.n_docs for sg in segs)
-    # idf over the SCORING terms only (a SpanNot's exclusion side gates
-    # matches but contributes no idf — scoring_terms())
-    sterms = sorted(scoring_terms(node))
-    idf_sum = np.float32(
-        sum(bm25.idf(n_docs, df_by_term[t]) for t in sterms if t in df_by_term)
-    )
-    sum_ttf = sum(sg.stats.sum_ttf for sg in segs)
-    cache = bm25.norm_cache(sum_ttf / n_docs if n_docs else 0.0)
-    present = sorted(df_by_term)
-
-    def score_bucket(pdf: pd.DataFrame) -> pd.DataFrame:
-        return _span_score_bucket(
-            pdf, node, required, idf_sum, cache, k, deleted
-        )
-
-    parts = [
-        sg.table(spark, "positions").filter(F.col("term").isin(present))
-        for sg in segs
-    ]
-    rows = parts[0]
-    for p_ in parts[1:]:
-        rows = rows.unionByName(p_, allowMissingColumns=True)
-    per_bucket = rows.groupBy("bucket").applyInPandas(score_bucket, _TOPK_SCHEMA)
-    return per_bucket.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
+def span_topk(spark: SparkSession, segment, node, k: int = 10) -> DataFrame:
+    """Top-k BM25 over a span query tree: MultiSearcher.span_topk on a
+    ``Searcher`` over one Segment, (doc_id, score) rows, or on a
+    MultiSearcher over a LIST of segments (global df / N / sum_ttf, so a
+    live multi-segment index ranks identically to its forced merge)."""
+    return (
+        Searcher(spark, segment) if isinstance(segment, Segment)
+        else MultiSearcher(spark, list(segment))
+    ).span_topk(node, k)
 
 
 def _required_terms(node) -> set[str]:
@@ -498,28 +441,18 @@ def _required_terms(node) -> set[str]:
     return set()
 
 
-def _span_score_bucket(
-    pdf: pd.DataFrame,
-    node,
-    required: set[str],
-    idf_sum: np.float32,
-    cache: np.ndarray,
-    k: int,
-    deleted=None,
-) -> pd.DataFrame:
-    """One doc-space bucket: span freq per candidate doc, BM25, local
-    top-k. Candidate gate: docs carrying every required term (vectorized);
-    the per-doc span walk runs only on those."""
-    empty = pd.DataFrame(
-        {"doc_id": np.array([], dtype=np.int64),
-         "score": np.array([], dtype=np.float32)}
-    )
+def bucket_span_freqs(
+    pdf: pd.DataFrame, node, required: set[str]
+) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """Span freqs for ONE doc-space bucket's positions rows: (doc_ids,
+    fractional freqs, norm_bytes) for docs with freq > 0, the contract of
+    phrase.py#bucket_phrase_freqs. Candidate gate: docs carrying every
+    required term (vectorized); the per-doc span walk runs only on
+    those."""
     if required:
         req_rows = pdf[pdf["term"].isin(sorted(required))]
         docs, counts = np.unique(req_rows["doc_id"].to_numpy(), return_counts=True)
         cand = set(docs[counts == len(required)].tolist())
-        if not cand:
-            return empty
         sub = pdf[pdf["doc_id"].isin(cand)]
     else:
         sub = pdf
@@ -547,17 +480,8 @@ def _span_score_bucket(
         if fr > 0.0:
             ids.append(d)
             freqs.append(fr)
-    if deleted is not None and len(deleted) and ids:
-        dele = set(int(x) for x in deleted)
-        keep = [i for i, d in enumerate(ids) if d not in dele]
-        ids = [ids[i] for i in keep]
-        freqs = [freqs[i] for i in keep]
-    if not ids:
-        return empty
-    ids_a = np.asarray(ids, dtype=np.int64)
-    f = np.asarray(freqs, dtype=np.float64).astype(np.float32)
-    norms = np.array([norm_by_doc[int(d)] for d in ids_a], dtype=np.uint8)
-    denom_add = cache[norms]
-    scores = (idf_sum * (f / (f + denom_add))).astype(np.float32)
-    order = np.lexsort((ids_a, -scores))[: min(k, ids_a.size)]
-    return pd.DataFrame({"doc_id": ids_a[order], "score": scores[order]})
+    return (
+        np.asarray(ids, dtype=np.int64),
+        np.asarray(freqs, dtype=np.float64),
+        np.array([norm_by_doc[d] for d in ids], dtype=np.uint8),
+    )

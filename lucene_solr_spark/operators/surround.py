@@ -20,8 +20,8 @@ Pinned subset (prefix notation, ops case-insensitive):
           | term | term'*'
 ``3W(a, b)`` = ordered within distance 3 (slop 2); ``N(...)`` unordered;
 bare ``W``/``N`` default to distance 1 (adjacent). The result is a span
-node tree for operators/spans.py#span_topk — scoring, candidate gating
-and the float32 discipline are entirely the span kernel's.
+node tree for search.py#MultiSearcher.span_topk — scoring, candidate
+gating and the float32 discipline are entirely the span kernel's.
 """
 
 from __future__ import annotations

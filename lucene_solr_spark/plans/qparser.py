@@ -22,10 +22,11 @@ Supported grammar (the classic operators users actually type):
   [a TO b] / {a TO b}         TermRangeQuery     (-> ("range", lo, hi, inc))
 
 Output: operators.query.Term / Bool nodes for the scoring tree; multi-term
-and phrase leaves come out as plain tuples (kind, ...) the caller maps onto
-the engine's rewrite paths (expand_terms + topk_constant / phrase_topk) —
-exactly Lucene's MultiTermQuery rewrite seam. ``parse_scoring`` resolves
-those leaves against a Searcher into pure Term/Bool trees.
+and phrase leaves come out as plain tuples (kind, ...) that
+``resolve_multi_terms`` maps against a searcher — multi-term leaves
+through expand_terms into Term disjunctions, phrases into Phrase leaves —
+exactly Lucene's MultiTermQuery rewrite seam. The whole tree then scores
+in one Boolean-tree pass on the catalog searcher.
 
 Semantics notes (matching the classic parser):
 - default operator OR; bare terms in a boolean list are SHOULD clauses.

@@ -46,7 +46,7 @@ class SegmentStats:
     bucket_docs: int = 8192   # doc-space bucket width (block grid alignment)
     # doc-id range ([min,max], -1 = unknown/pre-r5 manifest): segments built
     # independently each assign ids from 0, so serving several of them in
-    # ONE flat doc-id space (edismax/surround segment lists) is only sound
+    # ONE flat doc-id space (edismax's segment lists) is only sound
     # when the ranges are disjoint — MultiSearcher's doc_base offsets exist
     # precisely because they usually are not. __main__._disjoint_doc_ids
     # checks this before any flat multi-segment serve.

@@ -390,7 +390,8 @@ def test_cli_edismax_multi_segment(spark, cli_index, tmp_path, capsys):
 
 def test_cli_surround_multi_segment(spark, cli_index, tmp_path, capsys):
     """surround over a 2-segment catalog equals the single-segment
-    ranking (span kernel takes the segment list, union terms dict)."""
+    ranking (catalog searcher: global stats, union terms dict), its ids
+    in the catalog's gdoc_id space."""
     from lucene_solr_spark.corpus import documents_as_corpus
     from lucene_solr_spark.operators.indexer import build_index
     from lucene_solr_spark.operators.search import Searcher
@@ -416,8 +417,11 @@ def test_cli_surround_multi_segment(spark, cli_index, tmp_path, capsys):
     seg1 = Catalog(cli_index).segments()[0]
     s = Searcher(spark, seg1)
     node = parse_surround("2W(key, s*)", expand=lambda p: s.expand_terms(prefix=p))
+    # srd1 keeps the corpus ids 250.. as local ids, at its docBase
+    base = MultiSearcher.from_catalog(spark, cat2).doc_base["srd1"]
     want = [
-        (int(r.doc_id), round(float(r.score), 4))
+        (int(r.doc_id) + (base if r.doc_id >= 250 else 0),
+         round(float(r.score), 4))
         for r in span_topk(spark, seg1, node, k=5).collect()
     ]
     assert got == want and got
@@ -426,7 +430,9 @@ def test_cli_surround_multi_segment(spark, cli_index, tmp_path, capsys):
 def test_cli_multi_segment_overlapping_ids_refused(spark, tmp_path, capsys):
     """Independently built segments both assign doc ids from the same range;
     serving them in ONE flat doc-id space would silently merge different
-    documents' postings, so edismax and surround must refuse (run merge)."""
+    documents' postings, so edismax must refuse (run merge). surround
+    scores on the catalog searcher, in gdoc_id space."""
+    from lucene_solr_spark.operators.surround import parse_surround
     from lucene_solr_spark.sources.catalog import Catalog
 
     two = str(tmp_path / "overlap")
@@ -439,15 +445,21 @@ def test_cli_multi_segment_overlapping_ids_refused(spark, tmp_path, capsys):
             segment_id=f"ov{i}", with_positions=True,
         )
         cat2.commit_swap(add=[seg.segment_id])
-    for argv in (
-        ["search", "--index", two, "--query", "key order",
-         "--deftype", "edismax", "--qf", "content", "--k", "5"],
-        ["search", "--index", two, "--query", "W(key, order)",
-         "--deftype", "surround", "--k", "5"],
-    ):
-        rc = main(argv)
-        assert rc == 2
-        assert "overlap" in capsys.readouterr().err
+    rc = main(["search", "--index", two, "--query", "key order",
+               "--deftype", "edismax", "--qf", "content", "--k", "5"])
+    assert rc == 2
+    assert "overlap" in capsys.readouterr().err
+    rc = main(["search", "--index", two, "--query", "W(key, order)",
+               "--deftype", "surround", "--k", "5"])
+    assert rc == 0
+    got = [(r["doc_id"], r["score"]) for r in _lines(capsys)]
+    assert got and len({d for d, _ in got}) == len(got)
+    ms = MultiSearcher.from_catalog(spark, cat2)
+    want = [
+        (r["gdoc_id"], float(r["score"]))
+        for r in ms.span_topk(parse_surround("W(key, order)"), k=5).collect()
+    ]
+    assert got == want
 
 
 @pytest.mark.parametrize(
@@ -455,13 +467,14 @@ def test_cli_multi_segment_overlapping_ids_refused(spark, tmp_path, capsys):
     [
         ["--query", "W(key, order)", "--deftype", "surround"],
         ["--query", "spark", "--synonyms", "{syn}"],
+        ["--query", "key order", "--deftype", "edismax", "--qf", "content"],
     ],
-    ids=["surround", "synonyms"],
+    ids=["surround", "synonyms", "edismax"],
 )
 def test_cli_surround_excludes_deletes(spark, cli_index, tmp_path, capsys, argv):
-    """liveDocs: a tombstoned doc must vanish from surround and query-time
-    synonym results exactly as it does on the classic (MultiSearcher)
-    path."""
+    """liveDocs: a tombstoned doc must vanish from surround, query-time
+    synonym and edismax results exactly as it does on the classic
+    (MultiSearcher) path."""
     import shutil as _sh
 
     from lucene_solr_spark.sources.catalog import Catalog

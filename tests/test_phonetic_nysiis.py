@@ -5,7 +5,7 @@ pyspark Column rendering against the python chain."""
 from __future__ import annotations
 
 import pytest
-from hypothesis import given, settings
+from hypothesis import example, given, settings
 from hypothesis import strategies as st
 
 from lucene_solr_spark.functions.phonetic import (
@@ -62,8 +62,10 @@ def test_chain_matches_scan(word):
 
 
 @settings(max_examples=300, deadline=None)
-# h/w-heavy alphabet stresses the iterated prev-copy block
+# h/w-heavy alphabet stresses the prev-copy runs
 @given(st.text(alphabet="ahwbkmsc", min_size=1, max_size=10))
+@example("aschch")  # SCH overwrites read as the next SCH's S
+@example("whhhhh")  # an H run longer than a fixed rule iteration count
 def test_chain_matches_scan_hw_stress(word):
     assert nysiis_chain_py(word) == nysiis_py(word)
 

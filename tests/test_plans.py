@@ -247,3 +247,38 @@ def test_catalog_query_and_fetch_job_counts(spark, catalog3):
     )
     again = _fetch_stored(spark, segs, {sid: {doc: "x"}}, ["_version_"])
     assert again == {"x": {"_version_": 7}}
+
+
+def test_catalog_span_query_is_one_plan(spark, catalog3):
+    """A span query scores on the catalog searcher: one cogroup over every
+    segment's positions with the tombstones on its side channel, no join,
+    and rows equal to the scalar span oracle over all docs keyed by
+    gdoc_id, tombstones removed before the top-k."""
+    from lucene_solr_spark.operators.search import MultiSearcher
+    from lucene_solr_spark.operators.spans import SpanNear, SpanTerm
+
+    from .oracle import OracleIndex
+    from .oracle_spans import topk_span
+
+    ms = MultiSearcher.from_catalog(spark, catalog3)
+    node = SpanNear((SpanTerm("import"), SpanTerm("return")), slop=3,
+                    in_order=False)
+    hits = ms.span_topk(node, k=10)
+    plan = _plan(hits)
+    assert plan.count("FlatMapCoGroupsInPandas") == 1
+    assert plan.count("Exchange hashpartitioning(bucket") == 2
+    assert "SortMergeJoin" not in plan and "BroadcastHashJoin" not in plan
+
+    docs, dead = [], set()
+    for s in ms.segments:
+        base = ms.doc_base[s.segment_id]
+        rows = s.stored_fields(spark).select("doc_id", "content").collect()
+        docs += [(base + r["doc_id"], r["content"]) for r in rows]
+        dead |= {base + 1, base + 5}
+    want = [
+        (d, sc) for d, sc in topk_span(OracleIndex(docs), node, k=len(docs))
+        if d not in dead
+    ][:10]
+    got = [(r["gdoc_id"], r["score"]) for r in hits.collect()]
+    assert got == want and got
+    assert {r["segment_id"] for r in hits.collect()} == {"s0", "s1", "s2"}

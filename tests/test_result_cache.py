@@ -30,8 +30,16 @@ def _rows(df):
     return [(r["doc_id"], np.float32(r["score"])) for r in df.collect()]
 
 
-def _njobs(spark):
-    return len(spark.sparkContext.statusTracker().getJobIdsForGroup(None))
+def _last_job(spark) -> int:
+    return max(spark.sparkContext.statusTracker().getJobIdsForGroup(None),
+               default=-1)
+
+
+def _jobs_since(spark, last: int) -> int:
+    """Jobs started after job id ``last`` (the status store keeps a
+    bounded job history, so a plain count of it stops growing)."""
+    ids = spark.sparkContext.statusTracker().getJobIdsForGroup(None)
+    return sum(1 for j in ids if j > last)
 
 
 def test_hit_serves_identical_results_without_scan(spark, seg):
@@ -41,9 +49,9 @@ def test_hit_serves_identical_results_without_scan(spark, seg):
     first = _rows(s.topk("import return", k=10))
     assert first == baseline
     assert rc.misses == 1 and rc.hits == 0
-    before = _njobs(spark)
+    last = _last_job(spark)
     second = _rows(s.topk("import return", k=10))
-    jobs_on_hit = _njobs(spark) - before
+    jobs_on_hit = _jobs_since(spark, last)
     assert second == baseline
     assert rc.hits == 1
     # hit path: only the trivial local createDataFrame collect — no

@@ -12,6 +12,7 @@ import pytest
 from lucene_solr_spark.corpus import synth_corpus
 from lucene_solr_spark.operators.indexer import assign_doc_ids, build_index
 from lucene_solr_spark.operators.phrase import phrase_topk
+from lucene_solr_spark.operators.search import MultiSearcher
 from lucene_solr_spark.operators.spans import (
     SpanContaining,
     SpanFirst,
@@ -144,11 +145,10 @@ def test_deleted_excluded(spark, seg, oracle, vocab):
     q = SpanNear((SpanTerm(a), SpanTerm(b)), slop=0)
     full = topk_span(oracle, q, k=5)
     assert full
-    kill = np.array([full[0][0]], dtype=np.int64)
-    got = [
-        r["doc_id"]
-        for r in span_topk(spark, seg, q, k=5, deleted=kill).collect()
-    ]
+    ms = MultiSearcher(spark, [seg], deletes=spark.createDataFrame(
+        [(seg.segment_id, full[0][0])], "segment_id string, doc_id long"
+    ))
+    got = [r["doc_id"] for r in ms.span_topk(q, k=5).collect()]
     assert full[0][0] not in got and got
 
 
